@@ -1,18 +1,21 @@
 package graft.store
 
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 
-/** Filesystem atomicity primitives shared by the control-plane journals
-  * ([[ControlJournal]], [[SharedJournal]]). Two operations cover every
-  * need: publish-with-replace (pointer flips, lease refresh) and
+/** Filesystem primitives shared by the store's control plane
+  * ([[SharedJournal]] lanes and snapshots, [[FsMutex]] claims,
+  * [[SharedLog]] commits). Two write operations cover every need:
+  * publish-with-replace (pointer flips, journal entries, snapshots) and
   * create-exclusive (claim races — the reference's row-lock analogue).
   */
 private[store] object AtomicFs {
 
-  /** Write-to-temp + ONE atomic rename-with-overwrite (FileContext) —
-    * no delete-then-rename window where a concurrent reader could
-    * observe the path absent.
+  /** Write-to-temp + ONE rename-with-overwrite (FileContext): readers
+    * never see a half-written file. The overwrite is atomic on HDFS; on
+    * local paths Hadoop deletes the target before renaming, so a
+    * concurrent reader can briefly find the path absent — which is why
+    * [[FsMutex]] claims are never rewritten in place.
     */
   def atomicWrite(fs: FileSystem, conf: Configuration,
                   path: Path, bytes: Array[Byte]): Unit = {
@@ -57,4 +60,11 @@ private[store] object AtomicFs {
       }
     }
   }
+
+  /** One `listStatus`; a directory that does not exist (yet, or any
+    * more) lists as empty.
+    */
+  def list(fs: FileSystem, dir: Path): Seq[FileStatus] =
+    try fs.listStatus(dir).toSeq
+    catch { case _: java.io.FileNotFoundException => Nil }
 }

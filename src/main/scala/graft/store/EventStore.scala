@@ -579,16 +579,16 @@ final class EventStore(val spark: SparkSession) {
     */
   @volatile private var diskLayout: Option[(String, Int)] = None
 
-  /** Optional at-rest-log writer lease (reuses the ControlJournal
-    * epoch-lease scheme): without it, two PROCESSES calling save() or
-    * compact() on the same dir race the `_current` pointer flip — the
-    * manifest serializes readers against ONE writer, not writers
-    * against each other. With it, the second live writer is rejected
-    * at [[acquireLogWriter]], and every publish re-verifies the lease
-    * ([[WriterLease.refresh]] throws if a higher epoch fenced us after
-    * a crash-length pause).
+  /** Optional at-rest-log writer lease (an [[FsMutex]] with `_writer-`
+    * claims, failing fast like [[ControlJournal]]'s): without it, two
+    * PROCESSES calling save() or compact() on the same dir race the
+    * `_current` pointer flip — the manifest serializes readers against
+    * ONE writer, not writers against each other. With it, the second
+    * live writer is rejected at [[acquireLogWriter]], and every publish
+    * re-verifies the lease ([[FsMutex.refresh]] throws if a higher
+    * epoch fenced us after a crash-length pause).
     */
-  @volatile private var logLease: Option[WriterLease] = None
+  @volatile private var logLease: Option[FsMutex] = None
 
   /** Claim exclusive write ownership of the log at `dir`, or throw
     * [[ControlJournal.OwnershipHeldException]] while another live
@@ -599,10 +599,9 @@ final class EventStore(val spark: SparkSession) {
                        ownerId: String = java.util.UUID.randomUUID().toString,
                        leaseMs: Long = 60000L): Unit = commitLock.synchronized {
     require(logLease.isEmpty, "log writer lease already held; release it first")
-    val conf = spark.sparkContext.hadoopConfiguration
     val p = new HPath(dir)
-    val lease = new WriterLease(p, FileSystem.get(p.toUri, conf), conf,
-      ownerId, () => now(), leaseMs, prefix = "_writer-", what = "event log")
+    val lease = new FsMutex(p, FileSystem.get(p.toUri, spark.sparkContext.hadoopConfiguration),
+      ownerId, () => now(), leaseMs, prefix = "_writer-", acquireDeadlineMs = 0L)
     lease.acquire()
     logLease = Some(lease)
   }

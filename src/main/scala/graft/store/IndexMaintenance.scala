@@ -215,7 +215,8 @@ object IndexMaintenance {
   }
 
   /** Run `f` holding the index's cross-process MAINTENANCE MUTEX
-    * ([[FsMutex]] — the SharedJournal/SharedLog claim primitive,
+    * ([[FsMutex]] — the store's one claim primitive, shared with the
+    * journals' and the event log's leases and mutexes; here
     * `_maint-` epoch files in the index root, invisible to the
     * version regex and the component readers). Serializes
     * build/append/compact/vacuum across processes, CLOSING the

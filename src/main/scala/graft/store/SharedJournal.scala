@@ -6,34 +6,46 @@ import org.apache.hadoop.fs.{FileSystem, Path}
 import com.fasterxml.jackson.databind.ObjectMapper
 import com.fasterxml.jackson.module.scala.DefaultScalaModule
 
-/** Multi-writer control-plane journal: N live consumers SHARE one
+/** The control-plane write-ahead log for the streaming layer's
+  * `views` / `locks` state (reference schema.sql:157-200, 436-468) —
+  * both the multi-writer journal and, with ONE lane, the single-writer
+  * [[ControlJournal]].
+  *
+  * The reference gets durability for free: every ACK/lease mutation is
+  * one PostgreSQL transaction against the `locks` table. Here the
+  * control plane is driver-resident keyed state (ViewStreams), so each
+  * mutation is one journal entry, and N live consumers can SHARE one
   * view's partitions, the reference's `FOR UPDATE SKIP LOCKED`
   * semantics (schema.sql:405-417; proven concurrent by
   * tests/integration/concurrent-access/test_lock_contention.sql:41-48
   * — two sessions streaming one view split its partitions and never
-  * double-deliver). [[ControlJournal]] solves the durability half with
-  * a single-writer WAL; this class completes the SHARING half:
+  * double-deliver):
   *
   *  - **Per-writer lanes**: each live consumer appends its mutations
-  *    to its own `lanes/<writerId>/<seq>.json` sequence — no write
-  *    ever contends with another writer's, so there is nothing to
-  *    clobber (the failure mode a shared sequence would reintroduce).
+  *    to its own `lanes/<writerId>/<seq>.json` sequence (atomically
+  *    created files, zero-padded for lexicographic order; no append
+  *    semantics required, so the layout works on object stores) — no
+  *    write ever contends with another writer's, so there is nothing
+  *    to clobber (the failure mode a shared sequence would
+  *    reintroduce). A one-lane journal keeps its entries at
+  *    `<dir>/<seq>.json`; its single writer is fenced by a lease.
   *  - **Merged replay**: fold the latest snapshot plus every lane's
   *    later entries ordered by (writer clock, lane, seq), applied with
-  *    [[ControlJournal.applyRecord]]'s field-scoped semantics. The
-  *    hot mutations are made ORDER-TOLERANT: head offsets and ACKed
-  *    offsets advance by monotone max, lease/nack set only
-  *    `locked_until` — so cross-lane clock skew can at worst delay a
-  *    redelivery (at-least-once), never lose an ACK or a head.
+  *    [[ControlJournal.applyRecord]]'s field-scoped semantics. Entries
+  *    carry the RESULTING rows, so replay is a pure fold — it never
+  *    re-runs Spark jobs. The hot mutations are made ORDER-TOLERANT:
+  *    head offsets and ACKed offsets advance by monotone max,
+  *    lease/nack set only `locked_until` — so cross-lane clock skew can
+  *    at worst delay a redelivery (at-least-once), never lose an ACK or
+  *    a head.
   *  - **Candidate-selection mutex**: `SKIP LOCKED`'s atomicity lives
   *    in stage 1+2 of the delivery pipeline (pick unleased lagging
   *    partitions, lease them). Cross-process, that critical section
-  *    runs under a short-TTL mutex claimed with the same epoch-file
-  *    create-exclusive scheme ControlJournal uses for ownership —
-  *    crash-mid-mutex recovers by TTL expiry. ACK/NACK need no mutex:
-  *    the delivery lease makes the acking writer the partition's sole
-  *    mutator (exactly the reference's model, where ack_event updates
-  *    a row only the acker's session holds).
+  *    runs under a short-TTL [[FsMutex]] — crash-mid-mutex recovers by
+  *    TTL expiry. ACK/NACK need no mutex: the delivery lease makes the
+  *    acking writer the partition's sole mutator (exactly the
+  *    reference's model, where ack_event updates a row only the
+  *    acker's session holds).
   *  - **Checkpoint**: `snapshot-<n>.json` carries the merged state
   *    plus per-lane high-water marks; folded lane entries and older
   *    snapshots are deleted (under the mutex). Growth is bounded by
@@ -46,22 +58,29 @@ import com.fasterxml.jackson.module.scala.DefaultScalaModule
   * are per (view, decider_id)); the mutex serializes only candidate
   * SELECTION, as the reference's row-lock scan does.
   */
-final class SharedJournal(dirStr: String,
-                          conf: Configuration,
-                          val writerId: String,
-                          clock: () => Timestamp,
-                          mutexTtlMs: Long = 30000L,
-                          val compactThreshold: Int = SharedJournal.DefaultCompactThreshold) {
+final class SharedJournal private[store] (dirStr: String,
+                                          conf: Configuration,
+                                          val writerId: String,
+                                          clock: () => Timestamp,
+                                          mutexTtlMs: Long,
+                                          val compactThreshold: Int,
+                                          oneLane: Boolean) {
   import ControlJournal.{Record, JView, JLock}
   import SharedJournal._
 
-  require(writerId.matches("""[A-Za-z0-9._\-]+"""),
+  def this(dirStr: String, conf: Configuration, writerId: String, clock: () => Timestamp,
+           mutexTtlMs: Long = 30000L,
+           compactThreshold: Int = SharedJournal.DefaultCompactThreshold) =
+    this(dirStr, conf, writerId, clock, mutexTtlMs, compactThreshold, oneLane = false)
+
+  require(oneLane || writerId.matches("""[A-Za-z0-9._\-]+"""),
     s"writerId '$writerId' must be filesystem-safe (lane directory name)")
 
   private val dir = new Path(dirStr)
   private val fs = FileSystem.get(dir.toUri, conf)
   private val lanesDir = new Path(dir, "lanes")
-  private val laneDir = new Path(lanesDir, writerId)
+  private val laneId = if (oneLane) OneLaneId else writerId
+  private val laneDir = if (oneLane) dir else new Path(lanesDir, writerId)
   private var laneSeq: Long = 0L
   private val mutex = new FsMutex(dir, fs, writerId, clock, mutexTtlMs, MutexPrefix)
 
@@ -85,7 +104,7 @@ final class SharedJournal(dirStr: String,
     */
   def open(): Unit = {
     fs.mkdirs(laneDir)
-    val fromSnap = readLatestSnapshot().flatMap(_._2.laneSeqs.get(writerId)).getOrElse(0L)
+    val fromSnap = readLatestSnapshot().flatMap(_._2.laneSeqs.get(laneId)).getOrElse(0L)
     laneSeq = math.max(fromSnap, laneEntrySeqs(laneDir).lastOption.getOrElse(0L))
   }
 
@@ -168,22 +187,25 @@ final class SharedJournal(dirStr: String,
     scala.collection.mutable.HashMap.empty[(String, Long), Record]
 
   /** Entries newer than the snapshot watermarks, in merge order. */
-  private def pendingEntries(watermarks: Map[String, Long]): Seq[(Long, String, Long, Record)] = {
-    val lanes =
-      if (!fs.exists(lanesDir)) Nil
-      else fs.listStatus(lanesDir).toSeq.filter(_.isDirectory).map(_.getPath)
-    lanes.flatMap { lane =>
-      val wm = watermarks.getOrElse(lane.getName, 0L)
+  private def pendingEntries(watermarks: Map[String, Long]): Seq[(Long, String, Long, Record)] =
+    laneIds().flatMap { id =>
+      val lane = laneDirOf(id)
+      val wm = watermarks.getOrElse(id, 0L)
       laneEntrySeqs(lane).filter(_ > wm).flatMap { s =>
-        val key = (lane.getName, s)
-        entryCache.get(key).orElse {
+        entryCache.get((id, s)).orElse {
           val r = readJson[Record](lanePath(lane, s))
-          r.foreach(entryCache.update(key, _))
+          r.foreach(entryCache.update((id, s), _))
           r
-        }.map(r => (r.at, lane.getName, s, r))
+        }.map(r => (r.at, id, s, r))
       }
-    }.sortBy { case (at, laneId, s, _) => (at, laneId, s) }
-  }
+    }.sortBy { case (at, id, s, _) => (at, id, s) }
+
+  private def laneIds(): Seq[String] =
+    if (oneLane) Seq(laneId)
+    else AtomicFs.list(fs, lanesDir).filter(_.isDirectory).map(_.getPath.getName)
+
+  /** A one-lane journal's only lane is its directory. */
+  private def laneDirOf(id: String): Path = if (oneLane) laneDir else new Path(lanesDir, id)
 
   /** Fold a checkpoint in (caller holds the mutex) and return the
     * merged state. The state and the per-lane watermarks come from ONE
@@ -193,23 +215,38 @@ final class SharedJournal(dirStr: String,
     */
   def checkpoint(): (Seq[ViewRegistration], Seq[LockRow]) = {
     val (views, locks, pending) = foldState()
+    writeSnapshot(views.values.toSeq, locks.values.toSeq,
+      pending.groupBy(_._2).map { case (id, es) => id -> es.map(_._3).max })
+    (views.values.toSeq, locks.values.toSeq)
+  }
+
+  /** Checkpoint a single writer's live state, which already holds
+    * every entry of our lane — and may hold state the journal never
+    * recorded (a parquet `load()`), so it is written as given rather
+    * than re-folded.
+    */
+  private[store] def checkpoint(views: Seq[ViewRegistration], locks: Seq[LockRow]): Unit =
+    writeSnapshot(views, locks, Map(laneId -> laneSeq))
+
+  /** Write the next snapshot with the lanes' watermarks advanced to
+    * `folded`, then GC: folded lane entries (files + cache), then older
+    * snapshots.
+    */
+  private def writeSnapshot(views: Seq[ViewRegistration], locks: Seq[LockRow],
+                            folded: Map[String, Long]): Unit = {
     val prior = readLatestSnapshot()
     val priorWm = prior.map(_._2.laneSeqs).getOrElse(Map.empty[String, Long])
-    val folded = pending.groupBy(_._2).map { case (laneId, es) => laneId -> es.map(_._3).max }
     val wm = priorWm ++ folded.map { case (l, s) => l -> math.max(s, priorWm.getOrElse(l, 0L)) }
     val n = prior.map(_._1 + 1L).getOrElse(1L)
     AtomicFs.atomicWrite(fs, conf, snapshotPath(n), mapper.writeValueAsBytes(
-      SharedSnapshot(views.values.map(JView.of).toArray,
-        locks.values.map(JLock.of).toArray, wm, lamport)))
-    // GC: folded lane entries (files + cache), then older snapshots
-    wm.foreach { case (laneId, upTo) =>
-      val lane = new Path(lanesDir, laneId)
+      SharedSnapshot(views.map(JView.of).toArray, locks.map(JLock.of).toArray, wm, lamport)))
+    wm.foreach { case (id, upTo) =>
+      val lane = laneDirOf(id)
       laneEntrySeqs(lane).filter(_ <= upTo).foreach(s => fs.delete(lanePath(lane, s), false))
     }
-    entryCache.filterInPlace { case ((laneId, s), _) => s > wm.getOrElse(laneId, 0L) }
+    entryCache.filterInPlace { case ((id, s), _) => s > wm.getOrElse(id, 0L) }
     snapshotSeqs().filter(_ < n).foreach(s => fs.delete(snapshotPath(s), false))
     lastPendingCount = 0 // everything just folded
-    (views.values.toSeq, locks.values.toSeq)
   }
 
   /** True when enough un-folded entries have accumulated that the next
@@ -234,15 +271,13 @@ final class SharedJournal(dirStr: String,
   private def lanePath(lane: Path, s: Long): Path = new Path(lane, f"$s%020d.json")
 
   private def laneEntrySeqs(lane: Path): Seq[Long] =
-    if (!fs.exists(lane)) Nil
-    else fs.listStatus(lane).toSeq.map(_.getPath.getName)
+    AtomicFs.list(fs, lane).map(_.getPath.getName)
       .collect { case EntryName(d) => d.toLong }.sorted
 
   private def snapshotPath(n: Long): Path = new Path(dir, f"$SnapshotPrefix$n%020d.json")
 
   private def snapshotSeqs(): Seq[Long] =
-    if (!fs.exists(dir)) Nil
-    else fs.listStatus(dir).toSeq.map(_.getPath.getName)
+    AtomicFs.list(fs, dir).map(_.getPath.getName)
       .collect { case SnapshotName(d) => d.toLong }.sorted
 
   private def readLatestSnapshot(): Option[(Long, SharedSnapshot)] =
@@ -264,6 +299,8 @@ final class SharedJournal(dirStr: String,
 object SharedJournal {
   val DefaultCompactThreshold = 64
   private val MutexPrefix = "_mutex-"
+  /** Watermark key of a one-lane journal's only lane. */
+  private val OneLaneId = "_"
   private val SnapshotPrefix = "snapshot-"
   private val EntryName = """(\d{20})\.json""".r
   private val SnapshotName = """snapshot-(\d{20})\.json""".r

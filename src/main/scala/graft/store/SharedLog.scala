@@ -12,9 +12,9 @@ import com.fasterxml.jackson.module.scala.DefaultScalaModule
   * (reference schema.sql:23-26,44; proven concurrent by
   * tests/integration/concurrent-access/test_concurrent_producers.sql).
   * [[EventStore]] gives those semantics to N threads of ONE process
-  * (commitLock); [[WriterLease]] deliberately admits a single at-rest
-  * log writer. This class completes the producer half the way
-  * [[SharedJournal]] completed the consumer half:
+  * (commitLock); [[EventStore.acquireLogWriter]]'s lease deliberately
+  * admits a single at-rest log writer. This class completes the
+  * producer half the way [[SharedJournal]] completed the consumer half:
   *
   *  - **Commit sequence as the log's shared truth**: the log at `dir`
   *    IS an ordered sequence of manifests `commits/<seq>.json`, each
@@ -324,8 +324,7 @@ final class SharedLog(val spark: SparkSession,
   private def commitPath(s: Long): Path = new Path(commitsDir, f"$s%020d.json")
 
   private def commitSeqs(): Seq[Long] =
-    if (!fs.exists(commitsDir)) Nil
-    else fs.listStatus(commitsDir).toSeq.map(_.getPath.getName)
+    AtomicFs.list(fs, commitsDir).map(_.getPath.getName)
       .collect { case CommitName(d) => d.toLong }.sorted
 
   /** Manifests are immutable; cache parsed ones (resync then pays one

@@ -57,13 +57,15 @@ final class ViewStreams(val store: EventStore) {
     */
   private var shared: Option[SharedJournal] = None
 
-  /** Open (or take over) the durable journal at `dir` and replace the
-    * in-memory control plane with its replayed state. Enforces the
-    * single-writer rule: a second live ViewStreams on the same journal
-    * gets [[ControlJournal.OwnershipHeldException]] until the holder's
-    * lease expires (the reference's `FOR UPDATE SKIP LOCKED` analogue
-    * at process granularity — within a process, `stateLock` already
-    * serializes pollers). For N CONCURRENT live consumers, use
+  /** Open (or take over) the durable journal at `dir` — a one-lane
+    * [[SharedJournal]] under a writer lease ([[ControlJournal]]) — and
+    * replace the in-memory control plane with its replayed state.
+    * Enforces the single-writer rule: a second live ViewStreams on the
+    * same journal gets [[ControlJournal.OwnershipHeldException]] until
+    * the holder's lease expires (the reference's `FOR UPDATE SKIP
+    * LOCKED` analogue at process granularity — within a process,
+    * `stateLock` already serializes pollers, so polls take no fs mutex
+    * and do no resync). For N CONCURRENT live consumers, use
     * [[openSharedJournal]] instead.
     */
   def openJournal(dir: String,
@@ -141,39 +143,31 @@ final class ViewStreams(val store: EventStore) {
     setState(v, l)
   }
 
-  /** Durably record + locally apply one lock mutation. Caller holds
-    * `stateLock`. In shared mode the record is FIELD-scoped
-    * (`sharedOp`: head/lease/ack advance monotonically or set only
-    * locked_until — see [[ControlJournal.applyRecord]]) and the local
-    * application goes through the same fold as replay, so live state
-    * and any other writer's merged replay can never disagree on
-    * semantics. Single-writer mode keeps whole-row upserts — the
-    * reference's exact UPDATE semantics, including a backwards ack.
-    */
-  private def commitLocks(sharedOp: String, rows: Seq[LockRow]): Unit = {
-    if (rows.isEmpty) return
-    shared match {
-      case Some(s) =>
-        val rec = ControlJournal.Record(sharedOp,
-          locks = rows.map(ControlJournal.JLock.of).toArray) // at: Lamport-stamped by appendLane
-        s.appendLane(rec)
-        ControlJournal.applyRecord(viewsMap, locksMap, rec)
-      case None =>
-        journal.foreach(_.append(ControlJournal.Record(
-          ControlJournal.OpLocksUpsert,
-          locks = rows.map(ControlJournal.JLock.of).toArray)))
-        rows.foreach(l => locksMap((l.view, l.decider_id)) = l)
-    }
-  }
-
-  /** Route a view-level record (register/delete) to whichever journal
-    * is open. Caller holds `stateLock` (and the fs mutex in shared
+  /** Durably record + locally apply one control-plane mutation: append
+    * it to whichever journal is open, then apply it through
+    * [[ControlJournal.applyRecord]] — the fold every replay uses, so
+    * live state and any replay can never disagree on semantics. A
+    * fenced journal throws before anything is applied. Caller holds
+    * `stateLock` (and, for view-level records, the fs mutex in shared
     * mode).
     */
-  private def recordView(rec: ControlJournal.Record): Unit = {
+  private def commit(rec: ControlJournal.Record): Unit = {
     journal.foreach(_.append(rec))
     shared.foreach(_.appendLane(rec))
+    ControlJournal.applyRecord(viewsMap, locksMap, rec)
   }
+
+  /** [[commit]] one lock mutation. In shared mode the record is
+    * FIELD-scoped (`sharedOp`: head/lease/ack advance monotonically or
+    * set only locked_until), so every writer's merged replay folds it
+    * conflict-free. Single-writer mode keeps whole-row upserts — the
+    * reference's exact UPDATE semantics, including a backwards ack.
+    */
+  private def commitLocks(sharedOp: String, rows: Seq[LockRow]): Unit =
+    if (rows.nonEmpty)
+      commit(ControlJournal.Record(
+        if (shared.isDefined) sharedOp else ControlJournal.OpLocksUpsert,
+        locks = rows.map(ControlJournal.JLock.of).toArray))
 
   def allViews: Dataset[ViewRegistration] =
     stateLock.synchronized {
@@ -243,16 +237,12 @@ final class ViewStreams(val store: EventStore) {
     // cross-process mutex, sized by mutexTtlMs to outlast the backfill
     // job) across it is the correct trade.
     underSharedMutex {
-    val row = {
-      val r = viewsMap.get(view) match {
-        case Some(old) => old.copy(start_at = start, lock_timeout_s = lockTimeoutS,
-          pooling_delay_s = poolingDelayS, edge_function_url = edgeFunctionUrl,
-          updated_at = t)
-        case None => ViewRegistration(view, start, lockTimeoutS, poolingDelayS,
-          edgeFunctionUrl, t, t)
-      }
-      viewsMap(view) = r
-      r
+    val row = viewsMap.get(view) match {
+      case Some(old) => old.copy(start_at = start, lock_timeout_s = lockTimeoutS,
+        pooling_delay_s = poolingDelayS, edge_function_url = edgeFunctionUrl,
+        updated_at = t)
+      case None => ViewRegistration(view, start, lockTimeoutS, poolingDelayS,
+        edgeFunctionUrl, t, t)
     }
 
     val matrix = store.allEvents
@@ -265,19 +255,15 @@ final class ViewStreams(val store: EventStore) {
         coalesce($"first_after" - 1, $"max_off").as("last_offset"),
         $"head.is_final".as("offset_final"))
       .collect()
-    locksMap.filterInPlace { case ((v, _), _) => v != view }
-    matrix.foreach { r =>
-      locksMap((view, r.getString(0))) = LockRow(view, r.getString(0),
-        r.getLong(1), r.getLong(2), new Timestamp(t.getTime - 1),
-        r.getBoolean(3), t, t)
-    }
     // ONE combined record: a crash between separate view/locks appends
     // would replay a registration no writer ever held
-    recordView(ControlJournal.Record(ControlJournal.OpViewReplace,
+    commit(ControlJournal.Record(ControlJournal.OpViewReplace,
       view = ControlJournal.JView.of(row),
-      locks = locksMap.collect { case ((v, _), l) if v == view =>
-        ControlJournal.JLock.of(l) }.toArray))
-    row
+      locks = matrix.map { r =>
+        ControlJournal.JLock.of(LockRow(view, r.getString(0), r.getLong(1), r.getLong(2),
+          new Timestamp(t.getTime - 1), r.getBoolean(3), t, t))
+      }))
+    viewsMap(view)
     }
   }
 
@@ -298,10 +284,8 @@ final class ViewStreams(val store: EventStore) {
     * CASCADE, schema.sql:199).
     */
   def deleteView(view: String): Unit = underSharedMutex {
-    viewsMap.remove(view)
-    locksMap.filterInPlace { case ((v, _), _) => v != view }
-    // one record, cascade implied on replay (reference FK ON DELETE CASCADE)
-    recordView(ControlJournal.Record(ControlJournal.OpViewDelete, name = view))
+    // one record, cascade implied by the fold (reference FK ON DELETE CASCADE)
+    commit(ControlJournal.Record(ControlJournal.OpViewDelete, name = view))
   }
 
   // ------------------------------------------------------------------

@@ -10,8 +10,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * (reference analogue: PostgreSQL's row locks live as long as the
   * holding transaction — a long compaction must not lose its lock
   * mid-rewrite), takeover must still fire on a holder that STOPPED
-  * renewing, and a superseded holder must fail BEFORE publishing a
-  * pointer flip over the takeover's work.
+  * renewing (or crashed leaving an unreadable claim), and a superseded
+  * holder must fail BEFORE publishing a pointer flip over the
+  * takeover's work.
   */
 class FsMutexSpec extends AnyFunSuite with graft.testkit.TestKitReported {
 
@@ -43,15 +44,57 @@ class FsMutexSpec extends AnyFunSuite with graft.testkit.TestKitReported {
     b.release()
   }
 
+  test("an unreadable claim expires at its mtime plus the TTL") {
+    // a non-`file:` createExclusive creates the claim, then writes it;
+    // a holder that crashed in between leaves an empty claim behind
+    val dir = tmpDir(); val fs = fsOf(dir)
+    val forged = new Path(dir, f"_mutex-${1L}%020d")
+    fs.create(forged, false).close()
+    val mtime = fs.getFileStatus(forged).getModificationTime
+    var now = mtime + 999
+    val m = new FsMutex(dir, fs, "contender", () => new Timestamp(now), ttlMs = 1000,
+      acquireDeadlineMs = 0)
+    intercept[ControlJournal.OwnershipHeldException](m.acquire())
+    assert(!m.stillHeld())
+    now = mtime + 1000
+    m.acquire() // the crashed holder's claim has expired: taken over
+    assert(m.stillHeld())
+    assert(!fs.exists(forged), "the superseded claim is collected")
+    m.release()
+  }
+
   test("the maintenance heartbeat keeps a long rewrite's lock live past the TTL") {
     val dir = tmpDir().toString
-    // ttl 2 s, heartbeat period max(666, 250) = 666 ms — three renewal
-    // chances per TTL keeps the test robust under host contention
+    val fs = fsOf(new Path(dir))
+    /** Expiry recorded in the live (top-epoch) `_maint-` claim; None
+      * when a renewal superseded and deleted it between listing and read.
+      */
+    def claimExpiry(): Option[Long] =
+      new java.io.File(new Path(dir).toUri).listFiles()
+        .filter(_.getName.startsWith("_maint-")).maxByOption(_.getName)
+        .flatMap { f =>
+          try {
+            val txt = new String(java.nio.file.Files.readAllBytes(f.toPath), "UTF-8")
+            Some(txt.substring(txt.lastIndexOf('@') + 1).trim.toLong)
+          } catch { case _: java.nio.file.NoSuchFileException => None }
+        }
+    val deadline = System.nanoTime() + 60L * 1000 * 1000 * 1000
+    def awaitExpiry(ok: Long => Boolean): Long = {
+      var e = claimExpiry()
+      while (!e.exists(ok) && System.nanoTime() < deadline) {
+        Thread.sleep(20); e = claimExpiry()
+      }
+      e.filter(ok).getOrElse(fail(s"no claim expiry satisfied the wait: $e"))
+    }
+    // ttl 2 s, heartbeat period max(666, 250) = 666 ms
     IndexMaintenance.withMaintenanceLock(dir, conf, ttlMs = 2000) {
-      Thread.sleep(5000) // 2.5 TTLs: without renewal the claim expired
-      val contender = new FsMutex(new Path(dir), fsOf(new Path(dir)),
-        "contender", () => new Timestamp(System.currentTimeMillis()),
-        ttlMs = 2000, prefix = "_maint-", acquireDeadlineMs = 300)
+      val acquiredExpiry = awaitExpiry(_ => true) // acquire (or last renewal) time + TTL
+      awaitExpiry(_ > acquiredExpiry) // the heartbeat renewed the claim
+      // at the instant the unrenewed claim would have expired, the
+      // renewed one is still live: a contender is refused
+      val contender = new FsMutex(new Path(dir), fs, "contender",
+        () => new Timestamp(acquiredExpiry), ttlMs = 2000, prefix = "_maint-",
+        acquireDeadlineMs = 0)
       intercept[IllegalStateException](contender.acquire())
     }
     // and the lock releases cleanly afterwards: a fresh acquire wins fast
