@@ -9,6 +9,15 @@ import org.apache.spark.sql.SparkSession
   * sentinel + errors map), never swallowed into a fake timing.
   */
 object Bench {
+  /** A JSON number with `digits` decimals, independent of the JVM's
+    * default locale (a comma-decimal locale would print `1,500`).
+    */
+  private[graft] def jnum(v: Double, digits: Int): String =
+    String.format(java.util.Locale.ROOT, s"%.${digits}f", Double.box(v))
+
+  /** Label prefix of the opt-in scale-slice rows. */
+  private val SlicePrefix = "x100_"
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
@@ -233,7 +242,7 @@ object Bench {
       sys.env.get("SPARK_GRAFT_BENCH_SLICE_DIR") match {
         case Some(sd) =>
           timeQueries(sliceNames.filter(SparkEntry.queries.contains), sd,
-            n => s"x100_$n")
+            n => s"$SlicePrefix$n")
         case None => Nil
       }
     // NOTE on WARNs in this run's stderr: w4_ntile_quartiles emits
@@ -386,16 +395,24 @@ object Bench {
         else a.zip(b).map { case ((k, x), (_, y)) => k -> math.min(x, y) }
       }
 
-    val qs = (results ++ storeResults).map { case (k, v) => jstr(k) + ":" + f"$v%.3f" }
+    // the slice sweep shares timeQueries' bookkeeping; its rows stay out
+    // of the main artifact (errors, valid, shuffle dicts, samples) and
+    // report on their own line
+    val (sliceErrors, mainErrors) = errors.partition(_._1.startsWith(SlicePrefix))
+    errors = mainErrors
+    shuffleMb = shuffleMb.filterNot(_._1.startsWith(SlicePrefix))
+    shuffleJobsMb = shuffleJobsMb.filterNot(_._1.startsWith(SlicePrefix))
+    repSamples = repSamples.filterNot(_._1.startsWith(SlicePrefix))
+    val qs = (results ++ storeResults).map { case (k, v) => jstr(k) + ":" + jnum(v, 3) }
       .mkString("{", ",", "}")
     // one entry per query even when reps > 1 fail repeatedly —
     // duplicate keys make the JSON object ill-formed for strict parsers
     val errJson = errors.distinctBy(_._1).map { case (k, v) => jstr(k) + ":" + jstr(v) }
       .mkString("{", ",", "}")
-    val shJson = shuffleMb.sortBy(_._1).map { case (k, v) => jstr(k) + ":" + f"$v%.2f" }
+    val shJson = shuffleMb.sortBy(_._1).map { case (k, v) => jstr(k) + ":" + jnum(v, 2) }
       .mkString("{", ",", "}")
     val shJobsJson = shuffleJobsMb.sortBy(_._1)
-      .map { case (k, v) => jstr(k) + ":" + f"$v%.2f" }
+      .map { case (k, v) => jstr(k) + ":" + jnum(v, 2) }
       .mkString("{", ",", "}")
     val total = (results ++ storeResults).collect { case (_, v) if v >= 0 => v }.sum
     // The driver captures a bounded TAIL of stdout — round 5's committed
@@ -421,13 +438,15 @@ object Bench {
       catch { case _: Throwable => () } // read-only cwd must not fail the bench
     println(s"""{"metric":"shuffle_mb_detail","shuffle_mb":$shJson,"shuffle_mb_jobs":$shJobsJson,"sf":${jstr(sfDir)}}""")
     val sampJson = repSamples.reverse.map { case (n, ss) =>
-      s"${jstr(n)}:[${ss.map(s => f"$s%.3f").mkString(",")}]"
+      s"${jstr(n)}:[${ss.map(jnum(_, 3)).mkString(",")}]"
     }.mkString("{", ",", "}")
     println(s"""{"metric":"rep_samples","samples":$sampJson,"sf":${jstr(sfDir)}}""")
     if (sliceResults.nonEmpty) {
       val sliceJson = sliceResults
-        .map { case (k, v) => jstr(k) + ":" + f"$v%.3f" }.mkString("{", ",", "}")
-      println(s"""{"metric":"x100_slice","queries":$sliceJson,"cpus":${jstr(cpus)},"dir":${jstr(sys.env("SPARK_GRAFT_BENCH_SLICE_DIR"))}}""")
+        .map { case (k, v) => jstr(k) + ":" + jnum(v, 3) }.mkString("{", ",", "}")
+      val sliceErrJson = sliceErrors.distinctBy(_._1)
+        .map { case (k, v) => jstr(k) + ":" + jstr(v) }.mkString("{", ",", "}")
+      println(s"""{"metric":"x100_slice","queries":$sliceJson,"errors":$sliceErrJson,"cpus":${jstr(cpus)},"dir":${jstr(sys.env("SPARK_GRAFT_BENCH_SLICE_DIR"))}}""")
     }
     // The historical one-line contract (metric/value/unit/queries/
     // errors/sf) is ~6 KB at 153 entries. A tail-limited reader (the
@@ -440,7 +459,8 @@ object Bench {
     //  2. the per-query dict is re-emitted as SMALL chunked
     //     `queries_part` lines (i/n indexed, each line well under the
     //     tail window) that a tail-limited reader can reassemble;
-    //  3. the LAST stdout line is a compact (≤ ~400 char) summary —
+    //  3. the LAST stdout line is a compact (≤ ~400 char) summary,
+    //     under its own metric name `total_summary` —
     //     metric/value/unit/valid/n_queries/error count/sha-16 of the
     //     queries dict/pointer to BENCH_LATEST.json — that ALWAYS fits
     //     whole inside a 2000-char tail, so `parsed` is never null
@@ -448,7 +468,7 @@ object Bench {
     // No timing methodology changed; the numbers are the same dict.
     println(contractLine)
     val entryStrs = (results ++ storeResults)
-      .map { case (k, v) => jstr(k) + ":" + f"$v%.3f" }
+      .map { case (k, v) => jstr(k) + ":" + jnum(v, 3) }
     val chunks = {
       val buf = scala.collection.mutable.ListBuffer.empty[List[String]]
       var cur = List.empty[String]
@@ -475,7 +495,7 @@ object Bench {
     val errCompact = distinctErrs.take(2)
       .map { case (k, v) => jstr(k) + ":" + jstr(v.take(80)) }
       .mkString("{", ",", "}")
-    println(s"""{"metric":"total","value":$total,"unit":"sec","valid":$valid,"n_queries":${entryStrs.size},"n_errors":${distinctErrs.size},"errors":$errCompact,"queries_sha":${jstr(qsSha)},"queries_file":"BENCH_LATEST.json","queries_parts":${chunks.size},"cpus":${jstr(cpus)},"sf":${jstr(sfDir)}}""")
+    println(s"""{"metric":"total_summary","value":$total,"unit":"sec","valid":$valid,"n_queries":${entryStrs.size},"n_errors":${distinctErrs.size},"errors":$errCompact,"queries_sha":${jstr(qsSha)},"queries_file":"BENCH_LATEST.json","queries_parts":${chunks.size},"cpus":${jstr(cpus)},"sf":${jstr(sfDir)}}""")
     spark.stop()
   }
 }

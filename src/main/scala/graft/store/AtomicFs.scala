@@ -11,21 +11,33 @@ import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
   */
 private[store] object AtomicFs {
 
-  /** Write-to-temp + ONE rename-with-overwrite (FileContext): readers
-    * never see a half-written file. The overwrite is atomic on HDFS; on
-    * local paths Hadoop deletes the target before renaming, so a
-    * concurrent reader can briefly find the path absent — which is why
-    * [[FsMutex]] claims are never rewritten in place.
+  /** Write-to-temp + ONE atomic replace: readers never see a
+    * half-written file, and never find the path absent.
+    *  - HDFS-like stores: rename-with-OVERWRITE through FileContext.
+    *  - Local paths: there Hadoop's overwrite-rename deletes the target
+    *    first, so the temp is written checksum-free with `java.nio` and
+    *    moved with `ATOMIC_MOVE` (rename(2) replaces in one step). The
+    *    target's `.crc` sidecar is deleted before the move, so a reader
+    *    never checks new bytes against an old checksum.
     */
   def atomicWrite(fs: FileSystem, conf: Configuration,
                   path: Path, bytes: Array[Byte]): Unit = {
-    val tmp = new Path(path.getParent, s".tmp-${path.getName}")
-    val out = fs.create(tmp, true)
-    try out.write(bytes) finally out.close()
-    val fc = org.apache.hadoop.fs.FileContext.getFileContext(
-      fs.makeQualified(path).toUri, conf)
-    fc.rename(fs.makeQualified(tmp), fs.makeQualified(path),
-      org.apache.hadoop.fs.Options.Rename.OVERWRITE)
+    val qualified = fs.makeQualified(path)
+    if (qualified.toUri.getScheme == "file") {
+      import java.nio.file.{Files, Paths, StandardCopyOption}
+      val target = Paths.get(qualified.toUri.getPath)
+      val tmp = target.resolveSibling(s".tmp-${path.getName}")
+      Files.createDirectories(target.getParent)
+      Files.write(tmp, bytes)
+      Files.deleteIfExists(target.resolveSibling(s".${path.getName}.crc"))
+      Files.move(tmp, target, StandardCopyOption.ATOMIC_MOVE)
+    } else {
+      val tmp = new Path(path.getParent, s".tmp-${path.getName}")
+      val out = fs.create(tmp, true)
+      try out.write(bytes) finally out.close()
+      org.apache.hadoop.fs.FileContext.getFileContext(qualified.toUri, conf)
+        .rename(fs.makeQualified(tmp), qualified, org.apache.hadoop.fs.Options.Rename.OVERWRITE)
+    }
   }
 
   /** Create `path` with the given content atomically, failing (false)

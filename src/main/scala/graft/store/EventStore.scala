@@ -32,6 +32,26 @@ import org.apache.spark.sql.functions._
   *    unbounded input uses `GlobalIndex.withOrderedIndex`
   *    (range-partitioned parallel sort + partition prefix sums).
   *
+  * Commit model: the log is `base ∪ tail`.
+  *  - The BASE is fixed per version: the version checkpointed by
+  *    `load`, a lazy read of the version directory after `save`/`compact`
+  *    (materialized by localCheckpoint once, by the first commit after
+  *    that), or the in-memory checkpoint a bulk commit or a tail fold
+  *    produced.
+  *  - The TAIL is the driver-resident rows committed since, shown to
+  *    Spark as a LocalRelation. A commit appends to it and copies
+  *    nothing, so a single-event append costs its validation job alone
+  *    and adds no partition to later scans. The tail folds into the
+  *    base at `save`/`compact` (the new version holds it) or, as one
+  *    more partition, when it reaches [[EventStore.TailMaxRows]].
+  *
+  * Reads of one stream on a disk-backed log list and scan only the
+  * stream's `bucket=K` directory (K is the writer's Murmur3 `pmod`,
+  * computed on the driver) plus the matching unflushed tail rows, so a
+  * `getEvents` costs work proportional to the stream's bucket, not the
+  * log — the Spark analogue of the reference's (decider_id, decider)
+  * index probe (schema.sql:56).
+  *
   * Scale notes (100 TB): validation joins against the committed log are
   * key-pruned — the batch's distinct `(decider, decider_id)` pairs are
   * joined (broadcast, they are bounded by batch size) against the log
@@ -58,7 +78,45 @@ final class EventStore(val spark: SparkSession) {
     */
   private var decidersVersion: Long = 0L
   private var decidersSavedAt: Option[(String, Long)] = None
-  @volatile private var events: Dataset[EventRow] = spark.emptyDataset[EventRow]
+
+  /** The committed log `base ∪ tail` (see the class doc) as ONE
+    * immutable snapshot, so lock-free readers see a consistent base,
+    * tail and flush watermark.
+    *  - `materialized`: false while `base` lazily reads a version
+    *    directory (after `save`/`compact`); the first commit
+    *    checkpoints it.
+    *  - `baseHead`: no base row lies above it, so the unflushed rows
+    *    sit in the tail alone whenever `baseHead <= flushed`.
+    *  - `flushed`: offsets up to it are on disk under `diskLayout` —
+    *    the watermark [[saveIncrement]] flushes from.
+    */
+  private final class Log(val base: Dataset[EventRow], val materialized: Boolean,
+                          val baseHead: Long, val tail: Vector[EventRow],
+                          val flushed: Long) {
+    lazy val all: Dataset[EventRow] = if (tail.isEmpty) base else base.union(tail.toDS())
+    /** The log as an RDD, planned once per snapshot (`Dataset.rdd` is
+      * itself memoized per base), for per-task folds that must not pay
+      * a Catalyst pass per call.
+      */
+    lazy val rdd: org.apache.spark.rdd.RDD[EventRow] =
+      if (tail.isEmpty) base.rdd
+      else base.rdd.union(spark.sparkContext.parallelize(tail, 1))
+
+    /** Unflushed rows, of one `deciderId` or all: the driver-held tail
+      * alone, unless a bulk commit or a tail fold since the last flush
+      * left unflushed rows in the base.
+      */
+    def unflushed(deciderId: Option[String]): Option[DataFrame] = {
+      val fromTail = tail.filter(e => e.offset > flushed && deciderId.forall(_ == e.decider_id))
+      val fromBase =
+        if (baseHead > flushed) Some(base.toDF().filter($"offset" > flushed &&
+          deciderId.fold(lit(true))($"decider_id" === _)))
+        else None
+      (fromBase ++ Option.when(fromTail.nonEmpty)(fromTail.toDS().toDF())).reduceOption(_ union _)
+    }
+  }
+  @volatile private var log: Log =
+    new Log(spark.emptyDataset[EventRow], materialized = true, 0L, Vector.empty, 0L)
   private var nextTxn: Long = 1L
   /** Committed head of the global offset sequence (O(1) instead of a
     * max() scan per append; rebuilt on load).
@@ -72,7 +130,7 @@ final class EventStore(val spark: SparkSession) {
     * append, so the whole validate→commit span is one critical
     * section: the loser's validation runs AFTER the winner's commit
     * and sees its previous_id already claimed (DuplicatePreviousId).
-    * Readers are lock-free — `events` is a @volatile immutable
+    * Readers are lock-free — `log` is a @volatile immutable
     * snapshot. Append throughput is unaffected at scale: parallelism
     * lives INSIDE the batch (validation joins and replay distribute
     * across Spark tasks), not across concurrent driver calls, and the
@@ -154,22 +212,49 @@ final class EventStore(val spark: SparkSession) {
         base + 1 + i, txn)
     }.toSeq
 
-    // (5) Atomic commit: the union becomes visible as one new `events`
-    // value (≙ one Delta commit / one micro-batch). localCheckpoint
-    // truncates the union lineage so N appends don't build an N-deep
-    // plan (at rest the log is Parquet via save/load anyway).
+    // (5) Atomic commit: the rows join the tail and become visible as
+    // one new `log` snapshot (≙ one Delta commit / one micro-batch).
     if (accepted.nonEmpty) {
-      events = events.union(accepted.toDS()).localCheckpoint()
+      commitToTail(accepted)
       headOffset = accepted.last.offset
       nextTxn += 1
       noteCommitted(accepted)
-      // the disk snapshot stays live: streamSlice reads it up to
-      // flushedOffset and unions the in-memory tail past it, so
-      // bucket-pruned scans keep working between incremental flushes
       onCommit(accepted)
     }
     AppendResult(accepted, rejected)
   }
+
+  /** Checkpoint a base that still lazily reads a version directory —
+    * once per version, before the first job that scans the whole log —
+    * so validation folds and delivery polls run on in-memory blocks,
+    * not on a re-decode of every file. Caller holds commitLock.
+    */
+  private def materializeBase(): Unit = {
+    val l = log
+    if (!l.materialized)
+      log = new Log(l.base.localCheckpoint(), materialized = true, l.baseHead, l.tail, l.flushed)
+  }
+
+  /** Append driver-resident committed rows to the tail: no job, no copy
+    * of the log. At [[EventStore.TailMaxRows]] the tail folds into a
+    * freshly checkpointed base, as one more partition (so partitions
+    * grow with the data, one per fold, not per commit). Caller holds
+    * commitLock.
+    */
+  private def commitToTail(rows: Seq[EventRow]): Unit = {
+    materializeBase()
+    val l = log
+    val grown = new Log(l.base, l.materialized, l.baseHead, l.tail ++ rows, l.flushed)
+    log =
+      if (grown.tail.size < EventStore.TailMaxRows) grown
+      else new Log(spark.createDataset(grown.rdd).localCheckpoint(), materialized = true,
+        math.max(l.baseHead, grown.tail.map(_.offset).max), Vector.empty, l.flushed)
+  }
+
+  /** The committed log as an RDD, planned once per log version; shared
+    * by the validation fold and [[ViewStreams.streamEvents]].
+    */
+  private[store] def logRdd: org.apache.spark.rdd.RDD[EventRow] = log.rdd
 
   // ------------------------------------------------------------------
   // OLTP fast path: membership sketches + hot-stream cache.
@@ -216,7 +301,7 @@ final class EventStore(val spark: SparkSession) {
     */
   def enableFastAppend(fpp: Double = 0.01): Unit = commitLock.synchronized {
     val n = math.max(1024L, headOffset * 2)
-    val df = events.toDF()
+    val df = log.all.toDF()
     idSketch = df.stat.bloomFilter("event_id", n, fpp)
     prevSketch = df.filter($"previous_id".isNotNull).stat.bloomFilter("previous_id", n, fpp)
     streamSketch = df.select(concat_ws("|", $"decider", $"decider_id").as("sk"))
@@ -278,49 +363,42 @@ final class EventStore(val spark: SparkSession) {
   /** Driver-side fast path for bounded batches (≤ SmallBatchMax): when
     * the sketches can answer exactly, validation is pure driver work
     * ([[fastValidate]], zero jobs — the OLTP chained-append shape);
-    * otherwise the committed-log facts come from TWO narrow jobs
-    * against the cached log (a per-stream state aggregate and an
-    * id/prev membership filter) instead of the join/window/
-    * flatMapGroups pipeline. The replay itself is
-    * [[EventStore.replayStream]], the same code the distributed path
-    * executes, so the semantics cannot diverge.
+    * otherwise the committed-log facts come from ONE job, one scan and
+    * no exchange: a per-task fold over [[logRdd]] (the
+    * [[ViewStreams.streamEvents]] stage 3+4 pattern) returns, per task,
+    * one state row per batch stream and the id/prev hits, and the
+    * driver merges them. The replay itself is [[EventStore.replayStream]],
+    * the same code the distributed path executes, so the semantics
+    * cannot diverge.
     */
   private[store] def smallBatchValidate(batch: Seq[EventInput]): Seq[(EventInput, Long, String)] = {
     fastValidate(batch) match {
       case Some(r) => return r
       case None => ()
     }
+    materializeBase()
     val inputs = batch.zipWithIndex.map { case (e, i) =>
       (e, i.toLong, decidersMap.contains((e.decider, e.event, e.event_version)))
     }
-    val streams = inputs.map(t => (t._1.decider, t._1.decider_id)).distinct
-    val streamPred = streams.map { case (dk, di) =>
-      $"decider" === dk && $"decider_id" === di
-    }.reduce(_ || _)
-    // job 1: per-stream committed state (exists / finalized)
-    val state: Map[(String, String), (Boolean, Long)] = events.toDF()
-      .filter(streamPred)
-      .groupBy($"decider", $"decider_id")
-      .agg(max(when($"is_final", 1).otherwise(0)).as("fin"), count(lit(1)).as("n"))
-      .collect()
-      .map(r => (r.getString(0), r.getString(1)) -> (r.getInt(2) == 1, r.getLong(3)))
-      .toMap
-    // job 2: committed id/prev membership for the batch's keys
     val batchIds = inputs.map(_._1.event_id).distinct
     val batchPrevs = inputs.flatMap(_._1.previous_id).distinct
-    // event_id ∈ batchPrevs feeds the prev-existence check; event_id ∈
-    // batchIds and previous_id ∈ batchPrevs feed the two dup checks.
-    val idPred = $"event_id".isin((batchIds ++ batchPrevs).distinct: _*) ||
-      (if (batchPrevs.nonEmpty) $"previous_id".isin(batchPrevs: _*) else lit(false))
-    val hits = events.toDF().filter(idPred)
-      .select($"event_id", $"previous_id", $"decider", $"decider_id").collect()
+    val partials = logRdd.mapPartitions(EventStore.probeFold(
+      inputs.map(t => (t._1.decider, t._1.decider_id)).toSet,
+      (batchIds ++ batchPrevs).toSet, batchPrevs.toSet)).collect()
+    // per-stream committed state (exists / finalized)
+    val state: Map[(String, String), (Boolean, Long)] = partials.toSeq.flatMap(_._1)
+      .groupMapReduce(_._1)(_._2) { case ((f1, n1), (f2, n2)) => (f1 || f2, n1 + n2) }
+    // committed id/prev membership: event_id ∈ batchPrevs feeds the
+    // prev-existence check; event_id ∈ batchIds and previous_id ∈
+    // batchPrevs feed the two dup checks
+    val hits = partials.toSeq.flatMap(_._2)
     val idsSet = batchIds.toSet
     val prevsSet = batchPrevs.toSet
-    val committedIds = hits.map(_.getString(0)).filter(idsSet).toSet
-    val committedPrevs = hits.flatMap(r => Option(r.getString(1))).filter(prevsSet).toSet
+    val committedIds = hits.map(_.event_id).filter(idsSet).toSet
+    val committedPrevs = hits.flatMap(_.previous_id).filter(prevsSet).toSet
     // prev_in_stream: the claimed previous event exists in the SAME stream
     val inStream: Set[(String, String, String)] =
-      hits.map(r => (r.getString(0), r.getString(2), r.getString(3))).toSet
+      hits.map(h => (h.event_id, h.decider, h.decider_id)).toSet
     // intra-batch duplicate event_id rank (input order)
     val eidRank = scala.collection.mutable.Map.empty[String, Int]
     val flagged = inputs.map { case (e, idx, registered) =>
@@ -342,6 +420,8 @@ final class EventStore(val spark: SparkSession) {
     * flatMapGroups.
     */
   private[store] def distributedValidate(batch: Seq[EventInput]): Seq[(EventInput, Long, String)] = {
+    materializeBase()
+    val events = log.all
     // (1) FK gate (J8): the registry is driver-resident (see header),
     // so the composite-FK flag is stamped onto each row up front — the
     // moral equivalent of the broadcast semi-join, without shipping a
@@ -444,9 +524,13 @@ final class EventStore(val spark: SparkSession) {
     val staged = rows.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val n = staged.count()
     if (n > 0) {
-      events = events.union(staged).localCheckpoint()
+      // a bulk is not driver-resident: it folds the tail and lands in a
+      // new checkpointed base
+      val l = log
       headOffset = math.max(headOffset,
         staged.agg(max($"offset")).collect().head.getLong(0))
+      log = new Log(l.all.union(staged).localCheckpoint(), materialized = true,
+        headOffset, Vector.empty, l.flushed)
       nextTxn += 1
       val heads = staged.groupBy($"decider_id")
         .agg(max_by(struct($"offset", $"is_final"), $"offset").as("h"))
@@ -470,7 +554,7 @@ final class EventStore(val spark: SparkSession) {
     */
   private[store] def commitReplicated(rows: Seq[EventRow]): Unit = commitLock.synchronized {
     if (rows.isEmpty) return
-    events = events.union(rows.toDS()).localCheckpoint()
+    commitToTail(rows)
     headOffset = math.max(headOffset, rows.map(_.offset).max)
     nextTxn += 1
     noteCommitted(rows)
@@ -487,39 +571,45 @@ final class EventStore(val spark: SparkSession) {
   // ------------------------------------------------------------------
   // Scans (reference get_events/get_last_event, schema.sql:348-367)
 
-  /** Ordered scan of one entity's stream — partition-pruned when the
-    * log is Parquet-partitioned by decider bucket.
-    */
-  /** One stream's slice of the log. When the log is parquet-at-rest,
-    * the scan routes through the bucketed layout: the hash-bucket
-    * predicate prunes partition DIRECTORIES (PartitionFilters), so the
-    * scan touches 1/buckets of the files before the row-group filter
-    * even runs — the Spark analogue of the reference's
-    * (decider_id, decider) index (schema.sql:56; SURVEY X1).
+  /** One stream's slice of the log. On a disk-backed log the scan
+    * lists and reads only the stream's `bucket=K` directory: `basePath`
+    * keeps `bucket`/`day` as partition columns, and the bucket predicate
+    * stays in the plan as a PartitionFilter. It touches 1/buckets of the
+    * log's directories and files before the row-group filter even runs
+    * — the Spark analogue of the reference's (decider_id, decider) index
+    * (schema.sql:56; SURVEY X1). A bucket with no directory reads as
+    * empty; rows committed since the last flush come from the tail.
     */
   private def streamSlice(deciderId: String): DataFrame = {
-    val base = diskLayout match {
+    val l = log
+    val slice = diskLayout match {
       case Some((dir, buckets)) =>
-        // disk holds offsets <= flushedOffset; anything appended since
-        // the last save/saveIncrement only exists in the in-memory log,
-        // so union the unflushed tail — but ONLY when one exists:
-        // after save() rebased `events` onto the disk files, a
-        // vacuous tail filter would re-scan those same files without
-        // the bucket pruning this path exists to provide
-        val disk = readEventsDir(eventsPath(dir))
-          .filter($"bucket" === pmod(hash(lit(deciderId)), lit(buckets)))
-          .drop("bucket", "day")
-        if (flushedOffset < headOffset)
-          disk.unionByName(events.filter($"offset" > flushedOffset).toDF())
-        else disk
-      case None => events.toDF()
+        val k = EventStore.bucketOf(deciderId, buckets)
+        val disk = bucketScan(eventsPath(dir), k)
+          .filter($"bucket" === k).drop("bucket", "day")
+        l.unflushed(Some(deciderId))
+          .fold(disk)(disk.unionByName(_))
+      case None => l.all.toDF()
     }
-    base.filter($"decider_id" === deciderId)
+    slice.filter($"decider_id" === deciderId)
   }
 
+  /** The `bucket=k` directory of the events directory `root`, read with
+    * the at-rest schema; empty when no event of that bucket was flushed.
+    */
+  private def bucketScan(root: String, k: Int): DataFrame = {
+    val dir = new HPath(s"$root/bucket=$k")
+    if (dir.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(dir))
+      spark.read.schema(atRestSchema).option("basePath", root).parquet(dir.toString)
+    else spark.createDataFrame(java.util.List.of[org.apache.spark.sql.Row](), atRestSchema)
+  }
+
+  /** The stream in offset order. The sort runs in a single partition
+    * (one stream's rows), so it needs no range-sampling job.
+    */
   def getEvents(deciderId: String, decider: String): Dataset[EventRow] =
     streamSlice(deciderId).filter($"decider" === decider)
-      .orderBy($"offset").as[EventRow]
+      .repartition(1).sortWithinPartitions($"offset").as[EventRow]
 
   /** All events with `created_at >= from` — the view-backfill access
     * path (register_view's event-time seek, schema.sql:376-393). At
@@ -536,18 +626,16 @@ final class EventStore(val spark: SparkSession) {
     val zone = java.time.ZoneId.of(spark.conf.get("spark.sql.session.timeZone"))
     val fromDay = java.time.Instant.ofEpochMilli(from.getTime)
       .atZone(zone).toLocalDate.toString
-    val base = diskLayout match {
+    val l = log
+    val slice = diskLayout match {
       case Some((dir, _)) =>
         val disk = readEventsDir(eventsPath(dir))
           .filter($"day" >= fromDay)
           .drop("bucket", "day")
-        // tail only when unflushed events exist (see streamSlice)
-        if (flushedOffset < headOffset)
-          disk.unionByName(events.filter($"offset" > flushedOffset).toDF())
-        else disk
-      case None => events.toDF()
+        l.unflushed(None).fold(disk)(disk.unionByName(_))
+      case None => l.all.toDF()
     }
-    base.filter($"created_at" >= lit(from)).as[EventRow]
+    slice.filter($"created_at" >= lit(from)).as[EventRow]
   }
 
   /** Latest event by global offset — same bucket-pruned path as
@@ -559,7 +647,7 @@ final class EventStore(val spark: SparkSession) {
     streamSlice(deciderId)
       .orderBy($"offset".desc).limit(1).as[EventRow].collect().headOption
 
-  def allEvents: Dataset[EventRow] = events
+  def allEvents: Dataset[EventRow] = log.all
 
   def maxOffset(): Long = headOffset
 
@@ -626,11 +714,6 @@ final class EventStore(val spark: SparkSession) {
     */
   private def fenceLogWriter(): Unit = logLease.foreach(_.assertHeld())
 
-  /** Offset up to which the log at `diskLayout` already holds our
-    * events — the watermark [[saveIncrement]] flushes from.
-    */
-  @volatile private var flushedOffset: Long = 0L
-
   /** Partition columns of the at-rest layout: hash bucket of the
     * stream key (identity scans prune it) × UTC day of created_at
     * (time-range scans prune it) — the two access paths the reference
@@ -660,6 +743,10 @@ final class EventStore(val spark: SparkSession) {
   private def readEventsDir(path: String): DataFrame =
     spark.read.schema(atRestSchema).parquet(path)
 
+  /** A version directory as a (lazy) base for the in-memory log. */
+  private def readVersion(path: String): Dataset[EventRow] =
+    readEventsDir(path).drop("bucket", "day").as[EventRow]
+
   /** Full snapshots publish MVCC-style: write a NEW `events_v<N>`
     * directory, then atomically flip the `_current` pointer — a reader
     * resolving the pointer never observes a half-written or absent
@@ -667,24 +754,27 @@ final class EventStore(val spark: SparkSession) {
     * either; this is the manifest-indirection analogue). The
     * immediately-previous version is RETAINED so in-flight scans that
     * already listed its files finish; versions older than that are
-    * deleted.
+    * deleted. The version records its bucket count (`_buckets`), which
+    * [[load]] and [[compact]] use from then on.
     */
   def save(dir: String, buckets: Int = 32, retainDepth: Int = 1): Unit = commitLock.synchronized {
     verifyLogWriter()
-    val newVer = EventStore.nextVersionName(dir, spark.sparkContext.hadoopConfiguration)
-    withLayoutCols(events.toDF(), buckets)
+    val conf = spark.sparkContext.hadoopConfiguration
+    val newVer = EventStore.nextVersionName(dir, conf)
+    withLayoutCols(log.all.toDF(), buckets)
       .write.partitionBy("bucket", "day").mode("overwrite").parquet(s"$dir/$newVer")
+    EventStore.writeBuckets(s"$dir/$newVer", buckets, conf)
     deciderRegistry.write.mode("overwrite").parquet(s"$dir/deciders")
     decidersSavedAt = Some((dir, decidersVersion))
     fenceLogWriter()
-    EventStore.publishVersion(dir, newVer, spark.sparkContext.hadoopConfiguration, retainDepth)
-    // rebase the in-memory plan onto the just-published version: the
-    // plan may still lazily reference files of an OLDER version that
-    // the next rewrite retires — exactly the compact() hazard, so the
-    // same rebase (also truncates the union lineage for free)
-    events = readEventsDir(s"$dir/$newVer").drop("bucket", "day").as[EventRow]
+    EventStore.publishVersion(dir, newVer, conf, retainDepth)
+    // rebase the log onto the just-published version, which holds the
+    // whole tail: the base may still lazily reference files of an
+    // OLDER version that the next rewrite retires — exactly the
+    // compact() hazard, so the same rebase
+    log = new Log(readVersion(s"$dir/$newVer"), materialized = false,
+      headOffset, Vector.empty, headOffset)
     diskLayout = Some((dir, buckets))
-    flushedOffset = headOffset
   }
 
   /** Incremental flush: append only events past the flushed watermark
@@ -699,9 +789,12 @@ final class EventStore(val spark: SparkSession) {
   def saveIncrement(dir: String, buckets: Int = 32): Long = commitLock.synchronized {
     verifyLogWriter()
     if (!diskLayout.exists(_._1 == dir)) { save(dir, buckets); return headOffset }
-    val since = flushedOffset
-    val tail = events.filter($"offset" > since)
-    val n = tail.count()
+    val l = log
+    val pending = l.unflushed(None)
+    // the unflushed rows are usually all in the driver-held tail, which
+    // counts them without a job
+    val n = if (l.baseHead > l.flushed) pending.fold(0L)(_.count())
+      else l.tail.count(_.offset > l.flushed).toLong
     if (n > 0) {
       // appends land INSIDE the current version dir (additive — new
       // files appearing mid-listing is benign); only full rewrites
@@ -709,9 +802,8 @@ final class EventStore(val spark: SparkSession) {
       // writer appending into a dir a successor already retired would
       // silently lose those events.
       fenceLogWriter()
-      // size the write to the TAIL, not the lineage: the tail's plan
-      // inherits partitions from the parquet read + every appended
-      // batch (mostly empty at flush time), and each non-empty task
+      // size the write to the unflushed rows, not the lineage: their
+      // plan may inherit partitions from the base, and each non-empty task
       // writes a file per (bucket, day) it holds — guide §6 output
       // sizing. n is known; one task per `incrementRowsPerTask` rows
       // (conf `spark.graft.store.incrementRowsPerTask`) keeps flush
@@ -721,7 +813,7 @@ final class EventStore(val spark: SparkSession) {
         .getOption("spark.graft.store.incrementRowsPerTask")
         .map(_.toLong).getOrElse(262144L)
       val tasks = math.max(1L, (n + rowsPerTask - 1) / rowsPerTask).toInt
-      withLayoutCols(tail.toDF(), diskLayout.get._2).coalesce(tasks)
+      withLayoutCols(pending.get, diskLayout.get._2).coalesce(tasks)
         .write.partitionBy("bucket", "day").mode("append").parquet(eventsPath(dir))
       // the registry rewrite is skipped when THIS writer already wrote
       // this exact registry version to this dir (registrations are
@@ -730,7 +822,7 @@ final class EventStore(val spark: SparkSession) {
         deciderRegistry.write.mode("overwrite").parquet(s"$dir/deciders")
         decidersSavedAt = Some((dir, decidersVersion))
       }
-      flushedOffset = headOffset
+      log = new Log(l.base, l.materialized, l.baseHead, l.tail, headOffset)
     }
     n
   }
@@ -761,33 +853,48 @@ final class EventStore(val spark: SparkSession) {
       .repartition(col("bucket"), col("day"))
       .sortWithinPartitions($"bucket", $"day", $"decider_id", $"offset")
       .write.partitionBy("bucket", "day").mode("overwrite").parquet(s"$dir/$newVer")
-    // after load(), the in-memory `events` plan lazily READS the files
-    // of the version being retired — materialize the (bounded)
-    // unflushed tail now, then rebase `events` onto the compacted copy,
-    // so post-compact reads never depend on retired files
-    val tail = events.filter($"offset" > flushedOffset).localCheckpoint(true)
+    EventStore.writeBuckets(s"$dir/$newVer", diskLayout.get._2, conf)
+    // after load(), the base lazily READS the files of the version
+    // being retired — rebase it onto the compacted copy, so
+    // post-compact reads never depend on retired files. Unflushed rows
+    // stay: tail rows in the tail, and base rows past the watermark (a
+    // bulk commit or a tail fold since the last flush) materialized now.
+    val l = log
+    val carried =
+      if (l.baseHead > l.flushed) Some(l.base.filter($"offset" > l.flushed).localCheckpoint(true))
+      else None
     fenceLogWriter()
     EventStore.publishVersion(dir, newVer, conf, retainDepth)
-    events = readEventsDir(s"$dir/$newVer").drop("bucket", "day").as[EventRow]
-      .union(tail)
+    val compacted = readVersion(s"$dir/$newVer")
+    log = new Log(carried.fold(compacted)(compacted.union(_)), materialized = false,
+      if (carried.isDefined) l.baseHead else l.flushed,
+      l.tail.filter(_.offset > l.flushed), l.flushed)
   }
 
+  /** Load the log at `dir` and checkpoint it as the base, in one job.
+    * Its bucket count is the one recorded with the version; `buckets`
+    * only serves logs written without that record.
+    */
   def load(dir: String, buckets: Int = 32): Unit = commitLock.synchronized {
     sketchComplete = false // history not seen by the driver
     hotStreams.clear()
-    events = readEventsDir(eventsPath(dir)).drop("bucket", "day")
-      .as[EventRow]
-    diskLayout = Some((dir, buckets))
+    val path = eventsPath(dir)
+    // a restarted store decodes the version once, here: the head scan
+    // below and every later whole-log job (validation folds, delivery
+    // polls) read the checkpoint, so no client command pays that decode
+    val base = readVersion(path).localCheckpoint()
+    diskLayout = Some((dir,
+      EventStore.storedBuckets(path, spark.sparkContext.hadoopConfiguration).getOrElse(buckets)))
     decidersMap.clear()
     spark.read.parquet(s"$dir/deciders").as[DeciderRegistration]
       .collect().foreach(d =>
         decidersMap((d.decider, d.event, d.event_version)) = d)
     // in-memory registry now equals the on-disk copy of THIS dir
     decidersSavedAt = Some((dir, decidersVersion))
-    val heads = events.agg(max($"offset"), max($"transaction_id")).collect().headOption
+    val heads = base.agg(max($"offset"), max($"transaction_id")).collect().headOption
     headOffset = heads.flatMap(r => Option(r.get(0)).map(_.asInstanceOf[Long])).getOrElse(0L)
     nextTxn = heads.flatMap(r => Option(r.get(1)).map(_.asInstanceOf[Long])).getOrElse(0L) + 1
-    flushedOffset = headOffset
+    log = new Log(base, materialized = true, headOffset, Vector.empty, headOffset)
   }
 }
 
@@ -801,6 +908,31 @@ object EventStore {
 
   private val PointerFile = "_current"
   private val VersionName = """events_v(\d+)""".r
+  /** Bucket count of a version directory; Spark's reader skips `_` files. */
+  private val BucketsFile = "_buckets"
+
+  /** The `bucket=` partition a stream key lands in: the writer's own
+    * expression, `pmod(hash(decider_id), buckets)`, evaluated on the
+    * driver.
+    */
+  private[store] def bucketOf(deciderId: String, buckets: Int): Int = {
+    import org.apache.spark.sql.catalyst.expressions.{Literal, Murmur3Hash, Pmod}
+    Pmod(new Murmur3Hash(Seq(Literal(deciderId))), Literal(buckets)).eval().asInstanceOf[Int]
+  }
+
+  private def writeBuckets(versionDir: String, buckets: Int, conf: Configuration): Unit = {
+    val p = new HPath(s"$versionDir/$BucketsFile")
+    AtomicFs.atomicWrite(p.getFileSystem(conf), conf, p, buckets.toString.getBytes("UTF-8"))
+  }
+
+  private def storedBuckets(versionDir: String, conf: Configuration): Option[Int] = {
+    val p = new HPath(s"$versionDir/$BucketsFile")
+    try {
+      val in = p.getFileSystem(conf).open(p)
+      try Some(new String(org.apache.commons.io.IOUtils.toByteArray(in), "UTF-8").trim.toInt)
+      finally in.close()
+    } catch { case _: java.io.FileNotFoundException => None }
+  }
 
   /** The live events directory under `dir`: the version the `_current`
     * pointer names; with no pointer, the highest on-disk `events_v<N>`
@@ -833,13 +965,14 @@ object EventStore {
           new String(org.apache.commons.io.IOUtils.toByteArray(in), "UTF-8").trim)
         finally in.close()
       } catch {
-        // Transient by construction: the pointer flip renames the data
-        // file and (on ChecksumFileSystem, i.e. local FS) its .crc
-        // sidecar in two non-atomic steps, so a concurrent reader can
-        // catch the window where they mismatch (ChecksumException) or
-        // the file is mid-replace (FileNotFoundException after the
-        // exists check). The flip completes in microseconds — retry
-        // briefly; a PERSISTENT error is real and rethrows.
+        // Transient by construction: a pointer written by an older
+        // release still carries a .crc sidecar, which the first flip
+        // deletes just before its move, so a reader that opened the
+        // pair across that step can see a mismatch (ChecksumException);
+        // a store whose replace is not atomic can show the file
+        // mid-replace (FileNotFoundException after the exists check).
+        // Both last microseconds — retry briefly; a PERSISTENT error is
+        // real and rethrows.
         case e @ (_: org.apache.hadoop.fs.ChecksumException
                   | _: java.io.FileNotFoundException) =>
           attempt += 1
@@ -873,14 +1006,12 @@ object EventStore {
     * `$dir/events` directory counts as the OLDEST predecessor: it is
     * retained through the rewrite that republishes its data and
     * retired by a later one, like any superseded version — never kept
-    * forever, never silently resurrectable. The flip uses FileContext's
-    * rename-with-OVERWRITE — one atomic replace, no deleted-pointer
-    * window (a plain FileSystem.rename cannot replace, which would
-    * force delete-then-rename and a vacuum a concurrent
-    * [[resolveEventsPath]] could fall into; the max-version fallback
-    * there additionally covers a crash that loses the pointer — and
-    * predecessors are computed from DISK, not the pointer, so that
-    * fallback-live version stays retained too).
+    * forever, never silently resurrectable. The flip is
+    * [[AtomicFs.atomicWrite]] — one atomic replace, so a concurrent
+    * [[resolveEventsPath]] never finds the pointer absent; the
+    * max-version fallback there covers a crash that loses the pointer
+    * — and predecessors are computed from DISK, not the pointer, so
+    * that fallback-live version stays retained too.
     */
   private[store] def publishVersion(dir: String, newVer: String,
                                     conf: Configuration,
@@ -894,14 +1025,7 @@ object EventStore {
     // push the pointer-live previous version out of the keep set —
     // deleting it out from under in-flight scans.
     val pointerPrev = readPointer(dir, conf)
-    val tmp = new HPath(s"$dir/.tmp-$PointerFile")
-    val out = fs.create(tmp, true)
-    try out.write(newVer.getBytes("UTF-8")) finally out.close()
-    val ptr = new HPath(s"$dir/$PointerFile")
-    val fc = org.apache.hadoop.fs.FileContext.getFileContext(
-      fs.makeQualified(ptr).toUri, conf)
-    fc.rename(fs.makeQualified(tmp), fs.makeQualified(ptr),
-      org.apache.hadoop.fs.Options.Rename.OVERWRITE)
+    AtomicFs.atomicWrite(fs, conf, new HPath(s"$dir/$PointerFile"), newVer.getBytes("UTF-8"))
     val legacy = new HPath(s"$dir/events")
     val predecessors = // youngest-first, legacy oldest
       (fs.listStatus(new HPath(dir)).toSeq.map(_.getPath.getName)
@@ -934,6 +1058,39 @@ object EventStore {
     * fast path only changes where the (bounded) flag computation runs.
     */
   val SmallBatchMax = 64
+
+  /** Tail rows at which a commit folds the tail into a freshly
+    * checkpointed base: bounds the driver-held rows and the
+    * LocalRelation every query over the log carries, at one whole-log
+    * copy per this many committed rows.
+    */
+  private[store] val TailMaxRows = 1024
+
+  /** A committed row the small-batch validation probe matched. */
+  private[store] final case class Hit(event_id: String, previous_id: Option[String],
+                       decider: String, decider_id: String)
+
+  /** Per-task fold of the small-batch validation probe: the committed
+    * (finalized, count) state of each batch stream, and every row whose
+    * event_id is probed or whose previous_id is a batch previous_id.
+    * Output is bounded by the batch: one state row per stream per task,
+    * and unique ids/prevs allow at most two hits per probed value.
+    */
+  private[store] def probeFold(streams: Set[(String, String)], ids: Set[String], prevs: Set[String])
+      : Iterator[EventRow] => Iterator[(Map[(String, String), (Boolean, Long)], Vector[Hit])] = { it =>
+    val state = scala.collection.mutable.HashMap.empty[(String, String), (Boolean, Long)]
+    val hits = Vector.newBuilder[Hit]
+    it.foreach { e =>
+      val k = (e.decider, e.decider_id)
+      if (streams(k)) {
+        val (fin, n) = state.getOrElse(k, (false, 0L))
+        state(k) = (fin || e.is_final, n + 1)
+      }
+      if (ids(e.event_id) || e.previous_id.exists(prevs))
+        hits += Hit(e.event_id, e.previous_id, e.decider, e.decider_id)
+    }
+    Iterator.single((state.toMap, hits.result()))
+  }
 
   /** Per-stream sequential replay: the reference's trigger pipeline in
     * alphabetical firing order (t_check_final..., t_check_first...,

@@ -310,7 +310,7 @@ final class ViewStreams(val store: EventStore) {
     * window row of the declarative spelling), the ≤ leased×tasks
     * partials collect, and the driver finishes the min and the
     * presentation sort over ≤ limit rows. The fold runs on an RDD
-    * CACHED per log version ([[tailRdd]]): a poll loop re-running a
+    * CACHED per log version ([[EventStore.logRdd]]): a poll loop re-running a
     * DataFrame pipeline would pay Catalyst
     * analysis/optimization/codegen PER ROUND — measured as most of
     * each round's wall at drain batch sizes, with two exchanges
@@ -346,7 +346,7 @@ final class ViewStreams(val store: EventStore) {
 
     // Stage 3+4: one job, one scan, zero exchanges (see pipeline doc).
     val bounds = leased.map(l => l.decider_id -> l.last_offset).toMap
-    val partials = tailRdd().mapPartitions { it =>
+    val partials = store.logRdd.mapPartitions { it =>
       val best = scala.collection.mutable.HashMap.empty[String, EventRow]
       it.foreach { e =>
         bounds.get(e.decider_id) match {
@@ -361,22 +361,6 @@ final class ViewStreams(val store: EventStore) {
     }.collect()
     partials.groupBy(_.decider_id).values
       .map(_.minBy(_.offset)).toSeq.sortBy(_.offset)
-  }
-
-  /** The committed log as an RDD, re-planned only when the log VERSION
-    * changes (append/load/compact swap the Dataset instance): the
-    * delivery poll loop's per-round cost is then one RDD job, not a
-    * fresh Catalyst pass — see the [[streamEvents]] pipeline doc. */
-  private var tailRddCache: (AnyRef, org.apache.spark.rdd.RDD[EventRow]) = null
-  private def tailRdd(): org.apache.spark.rdd.RDD[EventRow] = {
-    val ds = store.allEvents
-    val c = tailRddCache
-    if (c != null && (c._1 eq ds)) c._2
-    else {
-      val r = ds.rdd
-      tailRddCache = (ds, r)
-      r
-    }
   }
 
   /** Streaming form of the SHARED consumption loop (S5 × SKIP LOCKED;
@@ -437,10 +421,14 @@ final class ViewStreams(val store: EventStore) {
     */
   private def selectAndLease(view: String, limit: Int, seconds: Long): Seq[LockRow] = {
     val t = now
-    // Stage 1: candidates (control-plane).
+    // Stage 1: candidates (control-plane) this replica can deliver. In
+    // shared mode another process's fanout can publish a head before
+    // the local store has folded that commit; leasing it would deliver
+    // nothing and strand the partition for the whole lease.
+    val deliverable = store.maxOffset()
     val cand = locksMap.values.toSeq
       .filter(l => l.view == view && l.locked_until.getTime < t.getTime &&
-        l.last_offset < l.offset)
+        l.last_offset < l.offset && l.offset <= deliverable)
       .sortBy(_.offset)
       .take(limit)
     // Stage 2: lease acquisition (control-plane).
