@@ -1,15 +1,24 @@
 package graft.store
 
+import com.fasterxml.jackson.databind.ObjectMapper
+import com.fasterxml.jackson.module.scala.DefaultScalaModule
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
+import org.apache.hadoop.fs.{ChecksumException, FileStatus, FileSystem, Path}
 
 /** Filesystem primitives shared by the store's control plane
   * ([[SharedJournal]] lanes and snapshots, [[FsMutex]] claims,
-  * [[SharedLog]] commits). Two write operations cover every need:
-  * publish-with-replace (pointer flips, journal entries, snapshots) and
-  * create-exclusive (claim races — the reference's row-lock analogue).
+  * [[SharedLog]] commits, [[VersionedDir]] pointers, index markers).
+  * Two write operations cover every need: publish-with-replace
+  * (pointer flips, journal entries, snapshots) and create-exclusive
+  * (claim races — the reference's row-lock analogue); [[read]] is
+  * their one small-file read.
   */
 private[store] object AtomicFs {
+
+  /** The store's one JSON mapper: journal entries and snapshots, log
+    * commits and index format markers.
+    */
+  val json: ObjectMapper = new ObjectMapper().registerModule(DefaultScalaModule)
 
   /** Write-to-temp + ONE atomic replace: readers never see a
     * half-written file, and never find the path absent.
@@ -71,6 +80,25 @@ private[store] object AtomicFs {
         case e: java.io.IOException => if (fs.exists(path)) false else throw e
       }
     }
+  }
+
+  /** The whole content of a small file in one `open`; None when the
+    * file does not exist. A [[ChecksumException]] is retried briefly:
+    * a file written by an older release still carries a `.crc`
+    * sidecar, which [[atomicWrite]] deletes just before its move, so a
+    * reader that opened the pair across that step sees a mismatch for
+    * microseconds. A persistent mismatch is real and rethrows.
+    */
+  def read(fs: FileSystem, path: Path): Option[Array[Byte]] = {
+    def attempt(n: Int): Option[Array[Byte]] =
+      try {
+        val in = fs.open(path)
+        try Some(in.readAllBytes()) finally in.close()
+      } catch {
+        case _: java.io.FileNotFoundException => None
+        case _: ChecksumException if n < 50 => Thread.sleep(2); attempt(n + 1)
+      }
+    attempt(0)
   }
 
   /** One `listStatus`; a directory that does not exist (yet, or any

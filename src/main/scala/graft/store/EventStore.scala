@@ -464,8 +464,8 @@ final class EventStore(val spark: SparkSession) {
     val committedPrevs = events.filter($"previous_id".isNotNull)
       .select($"previous_id".as("c_prev_id"), lit(true).as("dup_prev_id"))
     val uniqChecked = prevResolved
-      .join(broadcast_ifsmall(committedIds), $"in.event_id" === $"c_event_id", "left")
-      .join(broadcast_ifsmall(committedPrevs), $"in.previous_id" === $"c_prev_id", "left")
+      .join(committedIds, $"in.event_id" === $"c_event_id", "left")
+      .join(committedPrevs, $"in.previous_id" === $"c_prev_id", "left")
       .select($"in", $"input_idx", $"registered", $"prev_in_stream",
               coalesce($"dup_event_id", lit(false)).as("dup_event_id"),
               coalesce($"dup_prev_id", lit(false)).as("dup_prev_id"))
@@ -560,13 +560,6 @@ final class EventStore(val spark: SparkSession) {
     noteCommitted(rows)
     onCommit(rows)
   }
-
-  /** Broadcast only when the build side is known-bounded; the committed
-    * id sets grow with the log, so leave join-strategy choice to
-    * Catalyst/AQE there (it will pick SMJ once they exceed the
-    * broadcast threshold).
-    */
-  private def broadcast_ifsmall(df: DataFrame): DataFrame = df
 
   // ------------------------------------------------------------------
   // Scans (reference get_events/get_last_event, schema.sql:348-367)
@@ -760,7 +753,7 @@ final class EventStore(val spark: SparkSession) {
   def save(dir: String, buckets: Int = 32, retainDepth: Int = 1): Unit = commitLock.synchronized {
     verifyLogWriter()
     val conf = spark.sparkContext.hadoopConfiguration
-    val newVer = EventStore.nextVersionName(dir, conf)
+    val newVer = VersionedDir.EventLog.nextVersionName(dir, conf)
     withLayoutCols(log.all.toDF(), buckets)
       .write.partitionBy("bucket", "day").mode("overwrite").parquet(s"$dir/$newVer")
     EventStore.writeBuckets(s"$dir/$newVer", buckets, conf)
@@ -848,7 +841,7 @@ final class EventStore(val spark: SparkSession) {
     require(diskLayout.exists(_._1 == dir), s"no saved log at $dir")
     val conf = spark.sparkContext.hadoopConfiguration
     val curPath = eventsPath(dir)
-    val newVer = EventStore.nextVersionName(dir, conf)
+    val newVer = VersionedDir.EventLog.nextVersionName(dir, conf)
     readEventsDir(curPath)
       .repartition(col("bucket"), col("day"))
       .sortWithinPartitions($"bucket", $"day", $"decider_id", $"offset")
@@ -900,14 +893,11 @@ final class EventStore(val spark: SparkSession) {
 
 object EventStore {
   // ------------------------------------------------------------------
-  // Manifest-pointer publication for the at-rest log. `_current` names
-  // the live `events_v<N>` directory; rewrites publish a new version
-  // and flip the pointer atomically (temp-file + rename). External
-  // readers resolve through [[resolveEventsPath]] too, so the same
-  // no-vacuum guarantee holds outside this class.
+  // Manifest-pointer publication for the at-rest log: `_current` names
+  // the live `events_v<N>` directory ([[VersionedDir.EventLog]]).
+  // External readers resolve through [[resolveEventsPath]] too, so the
+  // same no-vacuum guarantee holds outside this class.
 
-  private val PointerFile = "_current"
-  private val VersionName = """events_v(\d+)""".r
   /** Bucket count of a version directory; Spark's reader skips `_` files. */
   private val BucketsFile = "_buckets"
 
@@ -927,120 +917,29 @@ object EventStore {
 
   private def storedBuckets(versionDir: String, conf: Configuration): Option[Int] = {
     val p = new HPath(s"$versionDir/$BucketsFile")
-    try {
-      val in = p.getFileSystem(conf).open(p)
-      try Some(new String(org.apache.commons.io.IOUtils.toByteArray(in), "UTF-8").trim.toInt)
-      finally in.close()
-    } catch { case _: java.io.FileNotFoundException => None }
+    AtomicFs.read(p.getFileSystem(conf), p).map(new String(_, "UTF-8").trim.toInt)
   }
 
-  /** The live events directory under `dir`: the version the `_current`
-    * pointer names; with no pointer, the highest on-disk `events_v<N>`
-    * (covers a crash that lost the pointer mid-flip), else the legacy
-    * unversioned `$dir/events` (pre-versioning logs read unchanged).
+  /** The live events directory under `dir` ([[VersionedDir]]'s
+    * resolution rule): the version `_current` names; with no pointer,
+    * the legacy unversioned `$dir/events` if present (pre-versioning
+    * logs read unchanged), else the highest complete `events_v<N>`
+    * (covers a lost pointer).
     */
   def resolveEventsPath(dir: String, conf: Configuration): String =
-    readPointer(dir, conf).map(v => s"$dir/$v")
-      .orElse(latestVersionOnDisk(dir, conf).map(v => s"$dir/$v"))
-      .getOrElse(s"$dir/events")
-
-  private def latestVersionOnDisk(dir: String, conf: Configuration): Option[String] = {
-    val fs = FileSystem.get(new java.net.URI(dir), conf)
-    val d = new HPath(dir)
-    if (!fs.exists(d)) None
-    else fs.listStatus(d).toSeq.map(_.getPath.getName)
-      .collect { case v @ VersionName(n) => (n.toLong, v) }
-      .sortBy(_._1).lastOption.map(_._2)
-  }
-
-  private def readPointer(dir: String, conf: Configuration): Option[String] = {
-    val fs = FileSystem.get(new java.net.URI(dir), conf)
-    val p = new HPath(s"$dir/$PointerFile")
-    var attempt = 0
-    while (true) {
-      try {
-        if (!fs.exists(p)) return None
-        val in = fs.open(p)
-        try return Some(
-          new String(org.apache.commons.io.IOUtils.toByteArray(in), "UTF-8").trim)
-        finally in.close()
-      } catch {
-        // Transient by construction: a pointer written by an older
-        // release still carries a .crc sidecar, which the first flip
-        // deletes just before its move, so a reader that opened the
-        // pair across that step can see a mismatch (ChecksumException);
-        // a store whose replace is not atomic can show the file
-        // mid-replace (FileNotFoundException after the exists check).
-        // Both last microseconds — retry briefly; a PERSISTENT error is
-        // real and rethrows.
-        case e @ (_: org.apache.hadoop.fs.ChecksumException
-                  | _: java.io.FileNotFoundException) =>
-          attempt += 1
-          if (attempt > 50) throw e
-          Thread.sleep(2)
-      }
-    }
-    None // unreachable
-  }
-
-  /** Next version to write: one past the max of the pointer's version
-    * and the highest on-disk `events_v<N>`. The disk fallback matters
-    * when the pointer was lost (the crash case [[resolveEventsPath]]'s
-    * own fallback exists for): numbering must continue PAST the
-    * version concurrent readers are actively resolving to, or the next
-    * rewrite would restart at v1 and immediately delete the live
-    * fallback version out from under them.
-    */
-  private[store] def nextVersionName(dir: String, conf: Configuration): String = {
-    val fromPtr = readPointer(dir, conf).collect { case VersionName(d) => d.toLong }
-    val fromDisk = latestVersionOnDisk(dir, conf).collect { case VersionName(d) => d.toLong }
-    s"events_v${(fromPtr ++ fromDisk).maxOption.getOrElse(0L) + 1}"
-  }
+    VersionedDir.EventLog.resolve(dir, conf)
 
   /** Atomically flip `_current` to `newVer`, then delete every version
-    * directory except the new one and its `retainDepth` youngest
-    * predecessors (kept for scans that listed files before the flip —
-    * the reader-lifetime contract: a scan must finish within
-    * `retainDepth` subsequent rewrites of the version it resolved, or
-    * its files may be deleted mid-scan). The legacy unversioned
-    * `$dir/events` directory counts as the OLDEST predecessor: it is
-    * retained through the rewrite that republishes its data and
-    * retired by a later one, like any superseded version — never kept
-    * forever, never silently resurrectable. The flip is
-    * [[AtomicFs.atomicWrite]] — one atomic replace, so a concurrent
-    * [[resolveEventsPath]] never finds the pointer absent; the
-    * max-version fallback there covers a crash that loses the pointer
-    * — and predecessors are computed from DISK, not the pointer, so
-    * that fallback-live version stays retained too.
+    * directory except the new one, its `retainDepth` youngest
+    * predecessors (kept for scans that listed files before the flip)
+    * and the version live before the flip ([[VersionedDir.publish]]). The legacy unversioned `$dir/events`
+    * directory counts as the OLDEST predecessor: it is retained through
+    * the rewrite that republishes its data and retired by a later one.
     */
   private[store] def publishVersion(dir: String, newVer: String,
                                     conf: Configuration,
-                                    retainDepth: Int = 1): Unit = {
-    val fs = FileSystem.get(new java.net.URI(dir), conf)
-    // Read the pointer BEFORE the flip: the version readers are
-    // actively resolving to MUST survive this rewrite regardless of
-    // how the on-disk dirs sort. A crash-orphaned higher-numbered dir
-    // (a save that wrote events_vN but died before flipping) would
-    // otherwise rank as the youngest predecessor and, at retainDepth=1,
-    // push the pointer-live previous version out of the keep set —
-    // deleting it out from under in-flight scans.
-    val pointerPrev = readPointer(dir, conf)
-    AtomicFs.atomicWrite(fs, conf, new HPath(s"$dir/$PointerFile"), newVer.getBytes("UTF-8"))
-    val legacy = new HPath(s"$dir/events")
-    val predecessors = // youngest-first, legacy oldest
-      (fs.listStatus(new HPath(dir)).toSeq.map(_.getPath.getName)
-        .collect { case v @ VersionName(n) if v != newVer => (n.toLong, v) }
-        ++ (if (fs.exists(legacy)) Seq((0L, "events")) else Nil))
-        .sortBy(-_._1).map(_._2)
-    val keep = Set(newVer) ++ pointerPrev ++ predecessors.take(math.max(retainDepth, 0))
-    fs.listStatus(new HPath(dir)).foreach { st =>
-      st.getPath.getName match {
-        case v @ VersionName(_) if !keep(v) => fs.delete(st.getPath, true)
-        case "events" if !keep("events") => fs.delete(st.getPath, true)
-        case _ => ()
-      }
-    }
-  }
+                                    retainDepth: Int = 1): Unit =
+    VersionedDir.EventLog.publish(dir, newVer, conf, retainDepth)
 
   /** Row shape after the join-based validation stages, consumed by the
     * per-stream sequential replay. Top-level so Spark can derive an

@@ -13,7 +13,8 @@ import ControlJournal.OwnershipHeldException
   * `_maint-`).
   *
   * The live holder is the HIGHEST `<prefix><epoch>` file, holding
-  * `owner@expiry`. Claiming — and renewing — creates the NEXT epoch
+  * `owner@expiry`. Claiming, renewing and releasing (an expired
+  * `owner@0` claim) each create the NEXT epoch, so epochs only grow,
   * with an atomic create-exclusive ([[AtomicFs.createExclusive]]): of N
   * claimants racing past the expired-claim check exactly one wins — no
   * write-then-read-back window, no delete in the claim path that could
@@ -63,9 +64,11 @@ final class FsMutex(dir: Path,
     while (true) {
       val nowMs = clock().getTime
       val seqs = claimSeqs()
-      val holder = seqs.lastOption.map(readClaim)
-        .filter { case (id, exp) => id != ownerId && exp > nowMs }
-      if (holder.isEmpty) {
+      val top = seqs.lastOption.map(readClaim)
+      val holder = top.flatten.filter { case (id, exp) => id != ownerId && exp > nowMs }
+      // a top claim gone since the listing means the listing is stale
+      // (a renewal, claim or release moved past it): list again
+      if (holder.isEmpty && !top.contains(None)) {
         val next = seqs.lastOption.getOrElse(0L) + 1L
         if (AtomicFs.createExclusive(fs, claimPath(next), claimBytes(nowMs + ttlMs), ownerId)) {
           // Superseded epochs are dead weight: liveness is decided by
@@ -94,9 +97,18 @@ final class FsMutex(dir: Path,
     }
   }
 
-  /** Delete our claim (clean shutdown). Safe to call when not held. */
+  /** Release by claiming the NEXT epoch as an expired `owner@0`
+    * marker (create-exclusive), then dropping ours: epochs only grow.
+    * Deleting outright would let the next claimant restart at epoch 1,
+    * below the epoch a stalled claimant listed before the release — on
+    * resuming, that claimant would create the next epoch above the new
+    * holder's and hold the mutex beside it. Safe to call when not held.
+    */
   def release(): Unit = synchronized {
-    if (epoch > 0L) fs.delete(claimPath(epoch), false)
+    if (epoch > 0L) {
+      AtomicFs.createExclusive(fs, claimPath(epoch + 1), claimBytes(0L), ownerId)
+      fs.delete(claimPath(epoch), false)
+    }
     epoch = 0L
   }
 
@@ -156,7 +168,7 @@ final class FsMutex(dir: Path,
   def assertHeld(): Unit =
     if (!renew()) {
       val holder = claimSeqs().lastOption.filter(_ > epoch)
-        .map(t => s"now held by '${readClaim(t)._1}' at epoch $t")
+        .map(t => s"now held by '${readClaim(t).fold("<released>")(_._1)}' at epoch $t")
         .getOrElse(s"its claim for epoch $epoch is gone")
       throw new OwnershipHeldException(
         s"writer '$ownerId' was fenced: $prefix claim at $dir $holder (ours: $epoch)")
@@ -171,20 +183,19 @@ final class FsMutex(dir: Path,
       .collect { case claimName(d) => d.toLong }.sorted
 
   /** The claim's (owner, expiry). Unreadable content reads as a foreign
-    * hold expiring `ttlMs` past the file's mtime. A claim deleted since
-    * the listing reads as expired: it was released, or a higher epoch
-    * superseded it, and then the create of the next epoch fails.
+    * hold expiring `ttlMs` past the file's mtime. None when the claim is
+    * gone since the listing: a higher epoch superseded it (a release
+    * files one first), so the listing is stale — acting on it could
+    * create an epoch its holder has already renewed past.
     */
-  private def readClaim(e: Long): (String, Long) = {
+  private def readClaim(e: Long): Option[(String, Long)] = {
     val p = claimPath(e)
-    try {
-      val in = fs.open(p)
-      val txt = try new String(org.apache.commons.io.IOUtils.toByteArray(in), "UTF-8")
-        finally in.close()
+    try AtomicFs.read(fs, p).map { bytes =>
+      val txt = new String(bytes, "UTF-8")
       val i = txt.lastIndexOf('@')
       val exp = if (i < 0) None else txt.substring(i + 1).trim.toLongOption
       exp.map(txt.substring(0, i) -> _)
         .getOrElse(s"<unreadable claim $p>" -> (fs.getFileStatus(p).getModificationTime + ttlMs))
-    } catch { case _: java.io.FileNotFoundException => ("<released>", 0L) }
+    } catch { case _: java.io.FileNotFoundException => None }
   }
 }

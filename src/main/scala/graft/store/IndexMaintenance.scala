@@ -26,15 +26,16 @@ import org.apache.hadoop.fs.{FileSystem, Path => HPath}
   *     rewrites a component into a fresh `<component>_v<K>.parquet`
   *     directory (one sorted file per band/bucket — row-group min/max
   *     stats then prune within the partition too) and publishes it
-  *     MVCC-style through a `_current.<component>` pointer — the
-  *     EventStore.compact discipline (EventStore.scala `publishVersion`):
-  *     one atomic rename flips readers to the compacted copy, there is
-  *     no window where a listing can fail, in-flight scans on the
-  *     previous version finish against its retained files (deleted
-  *     only by the NEXT rewrite), and `retainDepth` widens that
-  *     window for long scans. Appends land in the RESOLVED live
-  *     version, so compact → append → compact cycles stay append-only
-  *     between rewrites.
+  *     through a `_current.<component>` pointer with [[VersionedDir]],
+  *     the store's one publisher, which the event log's `save` and
+  *     `compact` use too: one atomic replace flips readers to the
+  *     compacted copy, in-flight scans on the previous version finish
+  *     against its retained files, and `retainDepth` widens that
+  *     window for long scans. Every layout resolves by one rule: the
+  *     pointer; else the legacy `<component>.parquet` if it exists;
+  *     else the highest version holding `_SUCCESS`. Appends land in
+  *     the RESOLVED live version, so compact → append → compact cycles
+  *     stay append-only between rewrites.
   */
 object IndexMaintenance {
 
@@ -43,11 +44,12 @@ object IndexMaintenance {
   /** Test-only fail-point seam (the etcd/TiKV failpoint pattern):
     * every maintenance operation calls [[failPoint]] at each file-op
     * boundary — after a metadata delete, between component data
-    * writes, before/after a pointer flip. Production default is a
-    * no-op; IndexCrashPropertySpec installs a throwing hook to
-    * simulate a process crash at EVERY boundary mechanically (round
-    * 12 found two real lifecycle bugs only by manual review — this is
-    * the mechanization). Hooks must be one-shot or re-entrant: a
+    * writes, before/after a pointer flip ([[VersionedDir]]'s, so the
+    * event log's `save`/`compact` cross those too). Production
+    * default is a no-op; IndexCrashPropertySpec installs a throwing
+    * hook to simulate a process crash at EVERY boundary mechanically
+    * (round 12 found two real lifecycle bugs only by manual review —
+    * this is the mechanization). Hooks must be one-shot or re-entrant: a
     * crashed operation leaves on-disk state exactly as a killed
     * process would. */
   @volatile private[graft] var failPointHook: String => Unit = _ => ()
@@ -66,49 +68,22 @@ object IndexMaintenance {
     */
   def writeMarker(dir: String, kind: String, version: Int,
                   props: Map[String, String], conf: Configuration): Unit = {
-    def q(s: String) = "\"" + s.replace("\\", "\\\\").replace("\"", "\\\"") + "\""
-    val propJson = props.toSeq.sortBy(_._1)
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ", ", "}")
-    val json =
-      s"""{"kind": ${q(kind)}, "version": $version, "props": $propJson}"""
     val fs = fsOf(dir, conf)
     fs.mkdirs(new HPath(dir))
     AtomicFs.atomicWrite(fs, conf, new HPath(s"$dir/$MarkerFile"),
-      json.getBytes("UTF-8"))
+      AtomicFs.json.writeValueAsBytes(Marker(kind, version, props)))
   }
+
+  private final case class Marker(kind: String, version: Int, props: Map[String, String])
 
   /** Read the marker at `dir`; None when absent (a pre-marker or
     * foreign directory). */
   def readMarker(dir: String, conf: Configuration)
-      : Option[(String, Int, Map[String, String])] = {
-    val fs = fsOf(dir, conf)
-    val p = new HPath(s"$dir/$MarkerFile")
-    if (!fs.exists(p)) None
-    else {
-      val in = fs.open(p)
-      val raw =
-        try {
-          val buf = new java.io.ByteArrayOutputStream()
-          org.apache.commons.io.IOUtils.copy(in, buf)
-          buf.toString("UTF-8")
-        } finally in.close()
-      val kindR = """"kind"\s*:\s*"((?:[^"\\]|\\.)*)"""".r
-      val verR = """"version"\s*:\s*(\d+)""".r
-      val propR = """"((?:[^"\\]|\\.)*)"\s*:\s*"((?:[^"\\]|\\.)*)"""".r
-      def unesc(s: String) = s.replace("\\\"", "\"").replace("\\\\", "\\")
-      for {
-        k <- kindR.findFirstMatchIn(raw).map(m => unesc(m.group(1)))
-        v <- verR.findFirstMatchIn(raw).map(_.group(1).toInt)
-      } yield {
-        val props = raw.indexOf("\"props\"") match {
-          case -1 => Map.empty[String, String]
-          case i => propR.findAllMatchIn(raw.substring(i + 7))
-            .map(m => unesc(m.group(1)) -> unesc(m.group(2))).toMap
-        }
-        (k, v, props)
-      }
+      : Option[(String, Int, Map[String, String])] =
+    AtomicFs.read(fsOf(dir, conf), new HPath(s"$dir/$MarkerFile")).map { bytes =>
+      val m = AtomicFs.json.readValue(bytes, classOf[Marker])
+      (m.kind, m.version, m.props)
     }
-  }
 
   /** Fail fast unless `dir` carries a marker matching `(kind,
     * version)` and every pinned prop in `props`. Returns the marker's
@@ -145,39 +120,18 @@ object IndexMaintenance {
     }
 
   // ------------------------------------------------------------------
-  // Versioned component publication (the EventStore `_current` pattern,
-  // generalized to named components within one index directory)
+  // Versioned component publication: one [[VersionedDir]] layout per
+  // named component within the index directory
 
-  private def pointerFile(component: String) = s"_current.$component"
-  private def versionRe(component: String) =
-    (java.util.regex.Pattern.quote(component) + """_v(\d+)\.parquet""").r
-
-  /** The live directory for `component` under `dir`: the version the
-    * `_current.<component>` pointer names, else the legacy unversioned
-    * `<component>.parquet` every pre-compaction index uses. A
-    * versioned directory WITHOUT a pointer is deliberately ignored:
-    * the pointer write is atomic, so a pointerless `_vN` can only be
-    * a compaction that crashed BEFORE publishing — a partial Spark
-    * output whose adoption would silently drop the intact legacy data
-    * (the orphan is garbage-collected by the next successful
-    * publish's retention pass, and nextVersionName still numbers
-    * above it so a retry never collides). */
-  def resolve(dir: String, component: String, conf: Configuration): String = {
-    val fs = fsOf(dir, conf)
-    val ptr = new HPath(s"$dir/${pointerFile(component)}")
-    val fromPtr =
-      if (!fs.exists(ptr)) None
-      else {
-        val in = fs.open(ptr)
-        try {
-          val buf = new java.io.ByteArrayOutputStream()
-          org.apache.commons.io.IOUtils.copy(in, buf)
-          Some(buf.toString("UTF-8").trim)
-        } finally in.close()
-      }
-    fromPtr.map(v => s"$dir/$v")
-      .getOrElse(s"$dir/$component.parquet")
-  }
+  /** The live directory for `component` under `dir`
+    * ([[VersionedDir]]'s resolution rule). A pointerless version next
+    * to the legacy `<component>.parquet` is a compaction that crashed
+    * BEFORE publishing and stays invisible; the next successful
+    * publish's retention pass collects it, and numbering continues
+    * above it so a retry never collides.
+    */
+  def resolve(dir: String, component: String, conf: Configuration): String =
+    VersionedDir.indexComponent(component).resolve(dir, conf)
 
   /** Retire a component's versioned state so a REBUILD into the
     * legacy `<component>.parquet` becomes the live version again:
@@ -195,23 +149,10 @@ object IndexMaintenance {
   def resetComponents(dir: String, components: Seq[String],
                       conf: Configuration): Unit = {
     val fs = fsOf(dir, conf)
-    val d = new HPath(dir)
-    if (!fs.exists(d)) return
-    val marker = new HPath(s"$dir/$MarkerFile")
-    if (fs.exists(marker)) fs.delete(marker, false)
+    if (!fs.exists(new HPath(dir))) return
+    fs.delete(new HPath(s"$dir/$MarkerFile"), false)
     failPoint("reset:marker-removed")
-    for (component <- components) {
-      val ptr = new HPath(s"$dir/${pointerFile(component)}")
-      if (fs.exists(ptr)) fs.delete(ptr, false)
-      failPoint(s"reset:pointer-removed:$component")
-      val re = versionRe(component)
-      fs.listStatus(d).toSeq.map(_.getPath.getName).foreach {
-        case v @ re(_) =>
-          fs.delete(new HPath(s"$dir/$v"), true)
-          failPoint(s"reset:version-removed:$component")
-        case _ => ()
-      }
-    }
+    components.foreach(VersionedDir.indexComponent(_).reset(dir, conf))
   }
 
   /** Run `f` holding the index's cross-process MAINTENANCE MUTEX
@@ -286,8 +227,7 @@ object IndexMaintenance {
   private val currentMaintMutex = new ThreadLocal[FsMutex]
 
   /** Reclaim every superseded version of `components` at `dir`,
-    * keeping ONLY the live version each `_current` pointer names (or
-    * the legacy `<component>.parquet` when no pointer exists).
+    * keeping ONLY each component's live version ([[resolve]]).
     * [[publish]] already bounds retention at `retainDepth` rewrites;
     * vacuum is the explicit reclaim entry point — the
     * EventStore.vacuum / SharedLog.vacuum analogue the index family
@@ -300,23 +240,9 @@ object IndexMaintenance {
     * compaction is in flight. Returns the directories deleted. */
   def vacuum(dir: String, components: Seq[String],
              conf: Configuration): Seq[String] = {
-    val fs = fsOf(dir, conf)
-    val d = new HPath(dir)
-    if (!fs.exists(d)) return Nil
+    if (!fsOf(dir, conf).exists(new HPath(dir))) return Nil
     withMaintenanceLock(dir, conf) {
-    components.flatMap { component =>
-      val liveName = resolve(dir, component, conf).stripPrefix(s"$dir/")
-      val re = versionRe(component)
-      val legacy = s"$component.parquet"
-      fs.listStatus(d).toSeq.map(_.getPath.getName).filter { name =>
-        val versioned = name match { case re(_) => true; case _ => false }
-        (versioned || name == legacy) && name != liveName
-      }.map { name =>
-        fs.delete(new HPath(s"$dir/$name"), true)
-        failPoint(s"vacuum:deleted:$component")
-        name
-      }
-    }
+      components.flatMap(VersionedDir.indexComponent(_).vacuum(dir, conf))
     }
   }
 
@@ -356,83 +282,38 @@ object IndexMaintenance {
     }
   }
 
-  private def latestOnDisk(dir: String, component: String,
-                           conf: Configuration): Option[String] = {
-    val fs = fsOf(dir, conf)
-    val d = new HPath(dir)
-    val re = versionRe(component)
-    if (!fs.exists(d)) None
-    else fs.listStatus(d).toSeq.map(_.getPath.getName)
-      .collect { case v @ re(n) => (n.toLong, v) }
-      .sortBy(_._1).lastOption.map(_._2)
-  }
-
   /** Fresh directory name for the next compacted version of
-    * `component` (strictly above every version on disk). */
+    * `component`: one past the max of its pointer and every version on
+    * disk. */
   def nextVersionName(dir: String, component: String,
-                      conf: Configuration): String = {
-    val n = latestOnDisk(dir, component, conf)
-      .map { v => val re = versionRe(component)
-        v match { case re(k) => k.toLong; case _ => 0L } }
-      .getOrElse(0L)
-    s"${component}_v${n + 1}.parquet"
-  }
+                      conf: Configuration): String =
+    VersionedDir.indexComponent(component).nextVersionName(dir, conf)
 
   /** Atomically flip `_current.<component>` to `newVer` and delete
-    * superseded versions beyond the `retainDepth` youngest (the
-    * pointer-previous version always survives this rewrite — the
-    * EventStore reader-lifetime contract: a scan must finish within
-    * `retainDepth` subsequent rewrites of the version it resolved).
-    * The legacy unversioned directory counts as the oldest
-    * predecessor.
+    * superseded versions beyond the `retainDepth` youngest
+    * ([[VersionedDir.publish]]: the version live before the flip
+    * always survives, the legacy directory counts as the oldest
+    * predecessor).
+    * Just before the flip, a holder of the maintenance mutex checks it
+    * still holds it.
     */
   def publish(dir: String, component: String, newVer: String,
-              conf: Configuration, retainDepth: Int = 1): Unit = {
-    val fs = fsOf(dir, conf)
-    val prevLive = { // pointer target BEFORE the flip — must survive
-      val ptr = new HPath(s"$dir/${pointerFile(component)}")
-      if (!fs.exists(ptr)) None
-      else {
-        val in = fs.open(ptr)
-        try {
-          val buf = new java.io.ByteArrayOutputStream()
-          org.apache.commons.io.IOUtils.copy(in, buf)
-          Some(buf.toString("UTF-8").trim)
-        } finally in.close()
-      }
-    }
-    failPoint(s"publish:before-flip:$component")
-    // Defense in depth for the one hole a TTL mutex leaves: a holder
-    // stalled past the TTL whose claim was taken over mid-rewrite
-    // must NOT flip the pointer over the takeover's work. The
-    // heartbeat makes this unreachable for a live holder; it fires
-    // only after a stall longer than the full TTL.
-    Option(currentMaintMutex.get()).foreach { m =>
-      if (!m.stillHeld())
-        throw new IllegalStateException(
-          s"maintenance lock for $dir was lost (TTL takeover after a " +
-            s"stall) before publishing $component -> $newVer; aborting " +
-            "the pointer flip. The superseded rewrite directory is " +
-            "garbage-collected by the takeover's next publish; re-run " +
-            "the operation.")
-    }
-    AtomicFs.atomicWrite(fs, conf, new HPath(s"$dir/${pointerFile(component)}"),
-      newVer.getBytes("UTF-8"))
-    failPoint(s"publish:after-flip:$component")
-    val legacy = s"$component.parquet"
-    val re = versionRe(component)
-    val predecessors = // youngest-first, legacy oldest
-      (fs.listStatus(new HPath(dir)).toSeq.map(_.getPath.getName)
-        .collect { case v @ re(n) if v != newVer => (n.toLong, v) }
-        ++ (if (fs.exists(new HPath(s"$dir/$legacy"))) Seq((0L, legacy)) else Nil))
-        .sortBy(-_._1).map(_._2)
-    val keep = Set(newVer) ++ prevLive ++
-      predecessors.take(math.max(retainDepth, 0))
-    (predecessors.filterNot(keep)).foreach { v =>
-      fs.delete(new HPath(s"$dir/$v"), true)
-      failPoint(s"publish:retention-deleted:$component")
-    }
-  }
+              conf: Configuration, retainDepth: Int = 1): Unit =
+    VersionedDir.indexComponent(component).publish(dir, newVer, conf, retainDepth, () =>
+      // Defense in depth for the one hole a TTL mutex leaves: a holder
+      // stalled past the TTL whose claim was taken over mid-rewrite
+      // must NOT flip the pointer over the takeover's work. The
+      // heartbeat makes this unreachable for a live holder; it fires
+      // only after a stall longer than the full TTL.
+      Option(currentMaintMutex.get()).foreach { m =>
+        if (!m.stillHeld())
+          throw new IllegalStateException(
+            s"maintenance lock for $dir was lost (TTL takeover after a " +
+              s"stall) before publishing $component -> $newVer; aborting " +
+              "the pointer flip. The superseded rewrite directory is " +
+              "garbage-collected by the takeover's next publish; re-run " +
+              "the operation.")
+      })
 
   /** True when any listed component's live version has accumulated
     * more parquet files than `threshold` — the ingest-loop

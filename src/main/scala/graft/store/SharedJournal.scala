@@ -3,8 +3,6 @@ package graft.store
 import java.sql.Timestamp
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileSystem, Path}
-import com.fasterxml.jackson.databind.ObjectMapper
-import com.fasterxml.jackson.module.scala.DefaultScalaModule
 
 /** The control-plane write-ahead log for the streaming layer's
   * `views` / `locks` state (reference schema.sql:157-200, 436-468) —
@@ -127,7 +125,7 @@ final class SharedJournal private[store] (dirStr: String,
     laneSeq += 1
     lamport += 1
     AtomicFs.atomicWrite(fs, conf, lanePath(laneDir, laneSeq),
-      mapper.writeValueAsBytes(rec.copy(at = lamport)))
+      AtomicFs.json.writeValueAsBytes(rec.copy(at = lamport)))
   }
 
   /** Merged replay: snapshot + all lanes' later entries, ordered by
@@ -238,7 +236,7 @@ final class SharedJournal private[store] (dirStr: String,
     val priorWm = prior.map(_._2.laneSeqs).getOrElse(Map.empty[String, Long])
     val wm = priorWm ++ folded.map { case (l, s) => l -> math.max(s, priorWm.getOrElse(l, 0L)) }
     val n = prior.map(_._1 + 1L).getOrElse(1L)
-    AtomicFs.atomicWrite(fs, conf, snapshotPath(n), mapper.writeValueAsBytes(
+    AtomicFs.atomicWrite(fs, conf, snapshotPath(n), AtomicFs.json.writeValueAsBytes(
       SharedSnapshot(views.map(JView.of).toArray, locks.map(JLock.of).toArray, wm, lamport)))
     wm.foreach { case (id, upTo) =>
       val lane = laneDirOf(id)
@@ -249,18 +247,10 @@ final class SharedJournal private[store] (dirStr: String,
     lastPendingCount = 0 // everything just folded
   }
 
-  /** True when enough un-folded entries have accumulated that the next
-    * mutex holder should fold a checkpoint in.
-    */
-  def compactionDue(): Boolean = {
-    val wm = readLatestSnapshot().map(_._2.laneSeqs).getOrElse(Map.empty[String, Long])
-    pendingEntries(wm).size >= compactThreshold
-  }
-
   /** Un-folded entry count observed by the LAST fold (replay or
-    * checkpoint) — lets a poll loop that just resynced decide
-    * compaction without paying [[compactionDue]]'s second lane listing
-    * and snapshot read per round.
+    * checkpoint): a poll loop that just resynced compares it with
+    * `compactThreshold` to decide whether to fold a checkpoint in,
+    * without a second lane listing and snapshot read per round.
     */
   def pendingSinceLastFold: Int = lastPendingCount
   @volatile private var lastPendingCount: Int = 0
@@ -288,12 +278,8 @@ final class SharedJournal private[store] (dirStr: String,
     * reads as absent, which is correct — its effect is in the snapshot.
     */
   private def readJson[T](path: Path)(implicit ct: scala.reflect.ClassTag[T]): Option[T] =
-    try {
-      val in = fs.open(path)
-      try Some(mapper.readValue(org.apache.commons.io.IOUtils.toByteArray(in),
-        ct.runtimeClass.asInstanceOf[Class[T]]))
-      finally in.close()
-    } catch { case _: java.io.FileNotFoundException => None }
+    AtomicFs.read(fs, path)
+      .map(AtomicFs.json.readValue(_, ct.runtimeClass.asInstanceOf[Class[T]]))
 }
 
 object SharedJournal {
@@ -318,10 +304,4 @@ object SharedJournal {
         contentAs = classOf[java.lang.Long])
       laneSeqs: Map[String, Long],
       maxAt: Long = 0L)
-
-  private val mapper: ObjectMapper = {
-    val m = new ObjectMapper()
-    m.registerModule(DefaultScalaModule)
-    m
-  }
 }

@@ -3,8 +3,6 @@ package graft.store
 import java.sql.Timestamp
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{Dataset, SparkSession}
-import com.fasterxml.jackson.databind.ObjectMapper
-import com.fasterxml.jackson.module.scala.DefaultScalaModule
 
 /** Multi-PROCESS event-log producers — the last reference parity gap:
   * PostgreSQL accepts appends from N independent connections and
@@ -312,7 +310,7 @@ final class SharedLog(val spark: SparkSession,
     */
   private def publish(seq: Long, c: LogCommit): Unit = {
     if (!AtomicFs.createExclusive(fs, commitPath(seq),
-          mapper.writeValueAsBytes(c), writerId)) {
+          AtomicFs.json.writeValueAsBytes(c), writerId)) {
       rebuild()
       throw new ControlJournal.OwnershipHeldException(
         s"writer '$writerId' lost the commit race at seq $seq " +
@@ -335,14 +333,9 @@ final class SharedLog(val spark: SparkSession,
 
   private def readCommit(s: Long): Option[LogCommit] =
     manifestCache.get(s).orElse {
-      try {
-        val in = fs.open(commitPath(s))
-        val m = try mapper.readValue(
-          org.apache.commons.io.IOUtils.toByteArray(in), classOf[LogCommit])
-        finally in.close()
-        manifestCache.update(s, m)
-        Some(m)
-      } catch { case _: java.io.FileNotFoundException => None }
+      val m = AtomicFs.read(fs, commitPath(s)).map(AtomicFs.json.readValue(_, classOf[LogCommit]))
+      m.foreach(manifestCache.update(s, _))
+      m
     }
 }
 
@@ -368,10 +361,4 @@ object SharedLog {
 
   final case class JDecider(decider: String, event: String,
                             event_version: Long, description: Option[String])
-
-  private val mapper: ObjectMapper = {
-    val m = new ObjectMapper()
-    m.registerModule(DefaultScalaModule)
-    m
-  }
 }
