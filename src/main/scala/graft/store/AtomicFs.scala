@@ -107,4 +107,19 @@ private[store] object AtomicFs {
   def list(fs: FileSystem, dir: Path): Seq[FileStatus] =
     try fs.listStatus(dir).toSeq
     catch { case _: java.io.FileNotFoundException => Nil }
+
+  /** The entry names of `dir`, empty when it does not exist. On `file:`
+    * one directory read and no per-entry stat: Hadoop's local
+    * `listStatus` stats each name after reading them all and silently
+    * drops an entry deleted in between, so a file superseded by
+    * create-then-delete (a renewed [[FsMutex]] claim) could vanish from
+    * a listing that also missed its successor. Elsewhere one
+    * `listStatus`.
+    */
+  def names(fs: FileSystem, dir: Path): Seq[String] = {
+    val qualified = fs.makeQualified(dir)
+    if (qualified.toUri.getScheme == "file")
+      Option(new java.io.File(qualified.toUri.getPath).list()).fold(Seq.empty[String])(_.toSeq)
+    else list(fs, dir).map(_.getPath.getName)
+  }
 }

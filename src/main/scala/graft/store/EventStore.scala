@@ -1,8 +1,10 @@
 package graft.store
 
 import java.sql.Timestamp
+import scala.reflect.ClassTag
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileSystem, Path => HPath}
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -19,12 +21,16 @@ import org.apache.spark.sql.functions._
   *    batch commit").
   *  - The three BEFORE-INSERT triggers (schema.sql:75-146), the
   *    composite FK (schema.sql:53), and the UNIQUE constraints
-  *    (schema.sql:32,44) become a validation pipeline of broadcast
-  *    semi-/anti-joins plus ONE `flatMapGroups` over
-  *    `(decider, decider_id)` that replays the batch's rows in input
-  *    order per stream — distributed across streams, sequential within
-  *    a stream, which is exactly the guarantee the reference documents
-  *    (ordering per partition, parallelism across partitions).
+  *    (schema.sql:32,44) become ONE per-stream sequential replay
+  *    ([[EventStore.replayStream]]) that checks the batch's rows in
+  *    input order per stream, over facts looked up in the committed
+  *    log: for a batch of up to [[EventStore.SmallBatchMax]] rows, the
+  *    driver's membership sketches or one per-task probe fold; above
+  *    it, broadcast semi-/anti-joins plus ONE `flatMapGroups` over
+  *    `(decider, decider_id)`. Either way: distributed across streams,
+  *    sequential within a stream, which is exactly the guarantee the
+  *    reference documents (ordering per partition, parallelism across
+  *    partitions).
   *  - The global BIGSERIAL offset is a per-commit sequence continued
   *    from the committed head (SURVEY §7.4.1): client append batches
   *    are driver-bounded, so assignment happens with the (already
@@ -33,32 +39,37 @@ import org.apache.spark.sql.functions._
   *    (range-partitioned parallel sort + partition prefix sums).
   *
   * Commit model: the log is `base ∪ tail`.
-  *  - The BASE is fixed per version: the version checkpointed by
-  *    `load`, a lazy read of the version directory after `save`/`compact`
-  *    (materialized by localCheckpoint once, by the first commit after
-  *    that), or the in-memory checkpoint a bulk commit or a tail fold
-  *    produced.
+  *  - The BASE is an in-memory checkpoint, hash-partitioned by stream:
+  *    `partitions` partitions (the session's default parallelism,
+  *    fixed per store), and stream `d` in partition
+  *    `pmod(murmur3(d), partitions)` — Spark's own `HashPartitioning`
+  *    expression, which [[EventStore.bucketOf]] evaluates on the
+  *    driver. `load` builds it in the job that checkpoints the version;
+  *    a bulk commit or a tail fold zips the new rows, partitioned the
+  *    same way, onto it, so base rows never move. It depends on no
+  *    version's files, so `save`/`compact` keep it.
   *  - The TAIL is the driver-resident rows committed since, shown to
   *    Spark as a LocalRelation. A commit appends to it and copies
   *    nothing, so a single-event append costs its validation job alone
   *    and adds no partition to later scans. The tail folds into the
-  *    base at `save`/`compact` (the new version holds it) or, as one
-  *    more partition, when it reaches [[EventStore.TailMaxRows]].
+  *    base when it reaches [[EventStore.TailMaxRows]].
   *
-  * Reads of one stream on a disk-backed log list and scan only the
-  * stream's `bucket=K` directory (K is the writer's Murmur3 `pmod`,
-  * computed on the driver) plus the matching unflushed tail rows, so a
-  * `getEvents` costs work proportional to the stream's bucket, not the
-  * log — the Spark analogue of the reference's (decider_id, decider)
-  * index probe (schema.sql:56).
+  * A read of one stream ([[getEvents]], [[getLastEvent]]) and the
+  * delivery fetch ([[ViewStreams.streamEvents]]) run on the base
+  * partitions of their streams alone, one task each, plus the matching
+  * tail rows on the driver ([[foldStreams]]): no file listing, no plan
+  * over the log, and work proportional to one partition — the Spark
+  * analogue of the reference's (decider_id, decider) index probe
+  * (schema.sql:56).
   *
   * Scale notes (100 TB): validation joins against the committed log are
   * key-pruned — the batch's distinct `(decider, decider_id)` pairs are
   * joined (broadcast, they are bounded by batch size) against the log
   * first, so the per-stream state aggregation scans only the touched
   * partitions' data, not the whole log. Nothing here collects event
-  * data to the driver; only per-partition counts and the rejected-row
-  * channel (bounded by batch size) leave the executors.
+  * data to the driver beyond one stream's rows for a read; otherwise
+  * only per-partition counts and the rejected-row channel (bounded by
+  * batch size) leave the executors.
   */
 final class EventStore(val spark: SparkSession) {
   import spark.implicits._
@@ -79,44 +90,44 @@ final class EventStore(val spark: SparkSession) {
   private var decidersVersion: Long = 0L
   private var decidersSavedAt: Option[(String, Long)] = None
 
+  /** Partitions of the base, fixed per store instance. */
+  private val partitions: Int = spark.sparkContext.defaultParallelism
+
+  /** The base partition holding stream `deciderId`. */
+  private def partitionOf(deciderId: String): Int = EventStore.bucketOf(deciderId, partitions)
+
   /** The committed log `base ∪ tail` (see the class doc) as ONE
     * immutable snapshot, so lock-free readers see a consistent base,
     * tail and flush watermark.
-    *  - `materialized`: false while `base` lazily reads a version
-    *    directory (after `save`/`compact`); the first commit
-    *    checkpoints it.
-    *  - `baseHead`: no base row lies above it, so the unflushed rows
-    *    sit in the tail alone whenever `baseHead <= flushed`.
+    *  - `baseHead`: the highest offset in the base; 0 for an empty base
+    *    (offsets start at 1), which has no partition worth a job. The
+    *    unflushed rows sit in the tail alone whenever `baseHead <= flushed`.
     *  - `flushed`: offsets up to it are on disk under `diskLayout` —
     *    the watermark [[saveIncrement]] flushes from.
     */
-  private final class Log(val base: Dataset[EventRow], val materialized: Boolean,
-                          val baseHead: Long, val tail: Vector[EventRow],
-                          val flushed: Long) {
+  private final class Log(val base: Dataset[EventRow], val baseHead: Long,
+                          val tail: Vector[EventRow], val flushed: Long) {
     lazy val all: Dataset[EventRow] = if (tail.isEmpty) base else base.union(tail.toDS())
     /** The log as an RDD, planned once per snapshot (`Dataset.rdd` is
       * itself memoized per base), for per-task folds that must not pay
       * a Catalyst pass per call.
       */
-    lazy val rdd: org.apache.spark.rdd.RDD[EventRow] =
+    lazy val rdd: RDD[EventRow] =
       if (tail.isEmpty) base.rdd
       else base.rdd.union(spark.sparkContext.parallelize(tail, 1))
 
-    /** Unflushed rows, of one `deciderId` or all: the driver-held tail
-      * alone, unless a bulk commit or a tail fold since the last flush
-      * left unflushed rows in the base.
+    /** Unflushed rows: the driver-held tail alone, unless a bulk commit
+      * or a tail fold since the last flush left unflushed rows in the
+      * base.
       */
-    def unflushed(deciderId: Option[String]): Option[DataFrame] = {
-      val fromTail = tail.filter(e => e.offset > flushed && deciderId.forall(_ == e.decider_id))
-      val fromBase =
-        if (baseHead > flushed) Some(base.toDF().filter($"offset" > flushed &&
-          deciderId.fold(lit(true))($"decider_id" === _)))
-        else None
+    def unflushed: Option[DataFrame] = {
+      val fromTail = tail.filter(_.offset > flushed)
+      val fromBase = Option.when(baseHead > flushed)(base.toDF().filter($"offset" > flushed))
       (fromBase ++ Option.when(fromTail.nonEmpty)(fromTail.toDS().toDF())).reduceOption(_ union _)
     }
   }
   @volatile private var log: Log =
-    new Log(spark.emptyDataset[EventRow], materialized = true, 0L, Vector.empty, 0L)
+    new Log(spark.emptyDataset[EventRow], 0L, Vector.empty, 0L)
   private var nextTxn: Long = 1L
   /** Committed head of the global offset sequence (O(1) instead of a
     * max() scan per append; rebuilt on load).
@@ -224,37 +235,59 @@ final class EventStore(val spark: SparkSession) {
     AppendResult(accepted, rejected)
   }
 
-  /** Checkpoint a base that still lazily reads a version directory —
-    * once per version, before the first job that scans the whole log —
-    * so validation folds and delivery polls run on in-memory blocks,
-    * not on a re-decode of every file. Caller holds commitLock.
-    */
-  private def materializeBase(): Unit = {
-    val l = log
-    if (!l.materialized)
-      log = new Log(l.base.localCheckpoint(), materialized = true, l.baseHead, l.tail, l.flushed)
-  }
-
   /** Append driver-resident committed rows to the tail: no job, no copy
-    * of the log. At [[EventStore.TailMaxRows]] the tail folds into a
-    * freshly checkpointed base, as one more partition (so partitions
-    * grow with the data, one per fold, not per commit). Caller holds
-    * commitLock.
+    * of the log. At [[EventStore.TailMaxRows]] the tail folds into the
+    * base ([[grownBase]]). Caller holds commitLock.
     */
   private def commitToTail(rows: Seq[EventRow]): Unit = {
-    materializeBase()
     val l = log
-    val grown = new Log(l.base, l.materialized, l.baseHead, l.tail ++ rows, l.flushed)
+    val tail = l.tail ++ rows
     log =
-      if (grown.tail.size < EventStore.TailMaxRows) grown
-      else new Log(spark.createDataset(grown.rdd).localCheckpoint(), materialized = true,
-        math.max(l.baseHead, grown.tail.map(_.offset).max), Vector.empty, l.flushed)
+      if (tail.size < EventStore.TailMaxRows) new Log(l.base, l.baseHead, tail, l.flushed)
+      else new Log(grownBase(l, byPartition(tail)),
+        math.max(l.baseHead, tail.map(_.offset).max), Vector.empty, l.flushed)
   }
 
-  /** The committed log as an RDD, planned once per log version; shared
-    * by the validation fold and [[ViewStreams.streamEvents]].
+  /** Driver-resident rows as an RDD in the base's partitioning, built on
+    * the driver: partition i holds the rows of the streams in base
+    * partition i.
     */
-  private[store] def logRdd: org.apache.spark.rdd.RDD[EventRow] = log.rdd
+  private def byPartition(rows: Seq[EventRow]): RDD[EventRow] = {
+    val groups = rows.groupBy(e => partitionOf(e.decider_id))
+    spark.sparkContext
+      .parallelize((0 until partitions).map(i => groups.getOrElse(i, Nil)), partitions)
+      .flatMap(identity)
+  }
+
+  /** The base of `l` plus `added` (in the base's partitioning), as a new
+    * checkpoint in one job: the two are zipped partition by partition,
+    * so base rows never reshuffle. Caller holds commitLock.
+    */
+  private def grownBase(l: Log, added: RDD[EventRow]): Dataset[EventRow] =
+    spark.createDataset(
+      if (l.baseHead == 0L) added else l.base.rdd.zipPartitions(added)(_ ++ _)
+    ).localCheckpoint()
+
+  /** The base as an RDD: partition i holds exactly the streams `d` with
+    * `partitionOf(d) == i`.
+    */
+  private[store] def baseRdd: RDD[EventRow] = log.base.rdd
+
+  /** `f` over the committed rows of the streams `ids`: once per base
+    * partition holding one of them — one task each, in one job, on the
+    * partitions computed on the driver — and once, on the driver, over
+    * the tail's rows of those streams (the last result). No file is
+    * listed or read and no query is planned; an empty base runs no
+    * job. Shared by the single-stream reads and the delivery fetch.
+    */
+  private[store] def foldStreams[U: ClassTag](ids: Set[String])(f: Iterator[EventRow] => U): Seq[U] = {
+    val l = log
+    val onRows = (it: Iterator[EventRow]) => f(it.filter(e => ids(e.decider_id)))
+    val fromBase =
+      if (l.baseHead == 0L || ids.isEmpty) Nil
+      else spark.sparkContext.runJob(l.base.rdd, onRows, ids.toSeq.map(partitionOf).distinct.sorted).toSeq
+    fromBase :+ onRows(l.tail.iterator)
+  }
 
   // ------------------------------------------------------------------
   // OLTP fast path: membership sketches + hot-stream cache.
@@ -364,7 +397,7 @@ final class EventStore(val spark: SparkSession) {
     * the sketches can answer exactly, validation is pure driver work
     * ([[fastValidate]], zero jobs — the OLTP chained-append shape);
     * otherwise the committed-log facts come from ONE job, one scan and
-    * no exchange: a per-task fold over [[logRdd]] (the
+    * no exchange: a per-task fold over the whole log (the
     * [[ViewStreams.streamEvents]] stage 3+4 pattern) returns, per task,
     * one state row per batch stream and the id/prev hits, and the
     * driver merges them. The replay itself is [[EventStore.replayStream]],
@@ -376,13 +409,12 @@ final class EventStore(val spark: SparkSession) {
       case Some(r) => return r
       case None => ()
     }
-    materializeBase()
     val inputs = batch.zipWithIndex.map { case (e, i) =>
       (e, i.toLong, decidersMap.contains((e.decider, e.event, e.event_version)))
     }
     val batchIds = inputs.map(_._1.event_id).distinct
     val batchPrevs = inputs.flatMap(_._1.previous_id).distinct
-    val partials = logRdd.mapPartitions(EventStore.probeFold(
+    val partials = log.rdd.mapPartitions(EventStore.probeFold(
       inputs.map(t => (t._1.decider, t._1.decider_id)).toSet,
       (batchIds ++ batchPrevs).toSet, batchPrevs.toSet)).collect()
     // per-stream committed state (exists / finalized)
@@ -420,7 +452,6 @@ final class EventStore(val spark: SparkSession) {
     * flatMapGroups.
     */
   private[store] def distributedValidate(batch: Seq[EventInput]): Seq[(EventInput, Long, String)] = {
-    materializeBase()
     val events = log.all
     // (1) FK gate (J8): the registry is driver-resident (see header),
     // so the composite-FK flag is stamped onto each row up front — the
@@ -525,12 +556,12 @@ final class EventStore(val spark: SparkSession) {
     val n = staged.count()
     if (n > 0) {
       // a bulk is not driver-resident: it folds the tail and lands in a
-      // new checkpointed base
+      // new checkpointed base, exchanged into the base's partitioning
       val l = log
       headOffset = math.max(headOffset,
         staged.agg(max($"offset")).collect().head.getLong(0))
-      log = new Log(l.all.union(staged).localCheckpoint(), materialized = true,
-        headOffset, Vector.empty, l.flushed)
+      val added = l.tail.toDS().union(staged).repartition(partitions, $"decider_id")
+      log = new Log(grownBase(l, added.rdd), headOffset, Vector.empty, l.flushed)
       nextTxn += 1
       val heads = staged.groupBy($"decider_id")
         .agg(max_by(struct($"offset", $"is_final"), $"offset").as("h"))
@@ -564,45 +595,14 @@ final class EventStore(val spark: SparkSession) {
   // ------------------------------------------------------------------
   // Scans (reference get_events/get_last_event, schema.sql:348-367)
 
-  /** One stream's slice of the log. On a disk-backed log the scan
-    * lists and reads only the stream's `bucket=K` directory: `basePath`
-    * keeps `bucket`/`day` as partition columns, and the bucket predicate
-    * stays in the plan as a PartitionFilter. It touches 1/buckets of the
-    * log's directories and files before the row-group filter even runs
-    * — the Spark analogue of the reference's (decider_id, decider) index
-    * (schema.sql:56; SURVEY X1). A bucket with no directory reads as
-    * empty; rows committed since the last flush come from the tail.
-    */
-  private def streamSlice(deciderId: String): DataFrame = {
-    val l = log
-    val slice = diskLayout match {
-      case Some((dir, buckets)) =>
-        val k = EventStore.bucketOf(deciderId, buckets)
-        val disk = bucketScan(eventsPath(dir), k)
-          .filter($"bucket" === k).drop("bucket", "day")
-        l.unflushed(Some(deciderId))
-          .fold(disk)(disk.unionByName(_))
-      case None => l.all.toDF()
-    }
-    slice.filter($"decider_id" === deciderId)
-  }
-
-  /** The `bucket=k` directory of the events directory `root`, read with
-    * the at-rest schema; empty when no event of that bucket was flushed.
-    */
-  private def bucketScan(root: String, k: Int): DataFrame = {
-    val dir = new HPath(s"$root/bucket=$k")
-    if (dir.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(dir))
-      spark.read.schema(atRestSchema).option("basePath", root).parquet(dir.toString)
-    else spark.createDataFrame(java.util.List.of[org.apache.spark.sql.Row](), atRestSchema)
-  }
-
-  /** The stream in offset order. The sort runs in a single partition
-    * (one stream's rows), so it needs no range-sampling job.
+  /** The stream in offset order: its base partition's rows, read by one
+    * task ([[foldStreams]]), plus its tail rows, sorted on the driver —
+    * a stream is small. The result is driver-resident, so collecting it
+    * runs no further job.
     */
   def getEvents(deciderId: String, decider: String): Dataset[EventRow] =
-    streamSlice(deciderId).filter($"decider" === decider)
-      .repartition(1).sortWithinPartitions($"offset").as[EventRow]
+    foldStreams(Set(deciderId))(_.filter(_.decider == decider).toVector)
+      .flatten.sortBy(_.offset).toDS()
 
   /** All events with `created_at >= from` — the view-backfill access
     * path (register_view's event-time seek, schema.sql:376-393). At
@@ -625,20 +625,20 @@ final class EventStore(val spark: SparkSession) {
         val disk = readEventsDir(eventsPath(dir))
           .filter($"day" >= fromDay)
           .drop("bucket", "day")
-        l.unflushed(None).fold(disk)(disk.unionByName(_))
+        l.unflushed.fold(disk)(disk.unionByName(_))
       case None => l.all.toDF()
     }
     slice.filter($"created_at" >= lit(from)).as[EventRow]
   }
 
-  /** Latest event by global offset — same bucket-pruned path as
-    * getEvents. QUIRK preserved from the reference (schema.sql:364):
-    * filters only decider_id, NOT decider — two deciders sharing an id
-    * return the globally latest of either.
+  /** Latest event by global offset — the same one-partition path as
+    * getEvents, each task keeping only its latest row. QUIRK preserved
+    * from the reference (schema.sql:364): filters only decider_id, NOT
+    * decider — two deciders sharing an id return the globally latest of
+    * either.
     */
   def getLastEvent(deciderId: String): Option[EventRow] =
-    streamSlice(deciderId)
-      .orderBy($"offset".desc).limit(1).as[EventRow].collect().headOption
+    foldStreams(Set(deciderId))(_.maxByOption(_.offset)).flatten.maxByOption(_.offset)
 
   def allEvents: Dataset[EventRow] = log.all
 
@@ -656,7 +656,8 @@ final class EventStore(val spark: SparkSession) {
   // stream scans prune and the streaming join co-locates (SURVEY X1/X2).
 
   /** (dir, buckets) when the log was loaded from / saved to parquet —
-    * enables partition-pruned stream scans in getEvents.
+    * the target of [[saveIncrement]]/[[compact]] and the source of
+    * [[eventsSince]]'s day-pruned scan.
     */
   @volatile private var diskLayout: Option[(String, Int)] = None
 
@@ -736,10 +737,6 @@ final class EventStore(val spark: SparkSession) {
   private def readEventsDir(path: String): DataFrame =
     spark.read.schema(atRestSchema).parquet(path)
 
-  /** A version directory as a (lazy) base for the in-memory log. */
-  private def readVersion(path: String): Dataset[EventRow] =
-    readEventsDir(path).drop("bucket", "day").as[EventRow]
-
   /** Full snapshots publish MVCC-style: write a NEW `events_v<N>`
     * directory, then atomically flip the `_current` pointer — a reader
     * resolving the pointer never observes a half-written or absent
@@ -761,12 +758,10 @@ final class EventStore(val spark: SparkSession) {
     decidersSavedAt = Some((dir, decidersVersion))
     fenceLogWriter()
     EventStore.publishVersion(dir, newVer, conf, retainDepth)
-    // rebase the log onto the just-published version, which holds the
-    // whole tail: the base may still lazily reference files of an
-    // OLDER version that the next rewrite retires — exactly the
-    // compact() hazard, so the same rebase
-    log = new Log(readVersion(s"$dir/$newVer"), materialized = false,
-      headOffset, Vector.empty, headOffset)
+    // the in-memory log reads no version's files: it stays as it is,
+    // now flushed up to the head
+    val l = log
+    log = new Log(l.base, l.baseHead, l.tail, headOffset)
     diskLayout = Some((dir, buckets))
   }
 
@@ -783,7 +778,7 @@ final class EventStore(val spark: SparkSession) {
     verifyLogWriter()
     if (!diskLayout.exists(_._1 == dir)) { save(dir, buckets); return headOffset }
     val l = log
-    val pending = l.unflushed(None)
+    val pending = l.unflushed
     // the unflushed rows are usually all in the driver-held tail, which
     // counts them without a job
     val n = if (l.baseHead > l.flushed) pending.fold(0L)(_.count())
@@ -815,7 +810,7 @@ final class EventStore(val spark: SparkSession) {
         deciderRegistry.write.mode("overwrite").parquet(s"$dir/deciders")
         decidersSavedAt = Some((dir, decidersVersion))
       }
-      log = new Log(l.base, l.materialized, l.baseHead, l.tail, headOffset)
+      log = new Log(l.base, l.baseHead, l.tail, headOffset)
     }
     n
   }
@@ -823,8 +818,8 @@ final class EventStore(val spark: SparkSession) {
   /** Compact the on-disk log: rewrite each bucket partition as one
     * parquet file, rows sorted by (decider_id, offset) so row-group
     * min/max stats make decider_id predicates skip inside the bucket
-    * too (the scan prunes twice: directory-level on the hash bucket,
-    * row-group-level on the sorted key). The rewrite is
+    * too (a scan of the files prunes twice: directory-level on the hash
+    * bucket, row-group-level on the sorted key). The rewrite is
     * shuffle-bounded by the log size, runs fully distributed, and
     * publishes MVCC-style through the `_current` manifest pointer:
     * the compacted copy lands in a fresh `events_v<N>` directory and
@@ -847,35 +842,25 @@ final class EventStore(val spark: SparkSession) {
       .sortWithinPartitions($"bucket", $"day", $"decider_id", $"offset")
       .write.partitionBy("bucket", "day").mode("overwrite").parquet(s"$dir/$newVer")
     EventStore.writeBuckets(s"$dir/$newVer", diskLayout.get._2, conf)
-    // after load(), the base lazily READS the files of the version
-    // being retired — rebase it onto the compacted copy, so
-    // post-compact reads never depend on retired files. Unflushed rows
-    // stay: tail rows in the tail, and base rows past the watermark (a
-    // bulk commit or a tail fold since the last flush) materialized now.
-    val l = log
-    val carried =
-      if (l.baseHead > l.flushed) Some(l.base.filter($"offset" > l.flushed).localCheckpoint(true))
-      else None
+    // the in-memory log reads no version's files, so it outlives the
+    // version this retires unchanged
     fenceLogWriter()
     EventStore.publishVersion(dir, newVer, conf, retainDepth)
-    val compacted = readVersion(s"$dir/$newVer")
-    log = new Log(carried.fold(compacted)(compacted.union(_)), materialized = false,
-      if (carried.isDefined) l.baseHead else l.flushed,
-      l.tail.filter(_.offset > l.flushed), l.flushed)
   }
 
-  /** Load the log at `dir` and checkpoint it as the base, in one job.
-    * Its bucket count is the one recorded with the version; `buckets`
-    * only serves logs written without that record.
+  /** Load the log at `dir` and checkpoint it as the base, partitioned by
+    * stream, in one job. Its bucket count is the one recorded with the
+    * version; `buckets` only serves logs written without that record.
     */
   def load(dir: String, buckets: Int = 32): Unit = commitLock.synchronized {
     sketchComplete = false // history not seen by the driver
     hotStreams.clear()
     val path = eventsPath(dir)
     // a restarted store decodes the version once, here: the head scan
-    // below and every later whole-log job (validation folds, delivery
-    // polls) read the checkpoint, so no client command pays that decode
-    val base = readVersion(path).localCheckpoint()
+    // below, every stream read and every whole-log job (validation
+    // folds) read the checkpoint, so no client command pays that decode
+    val base = readEventsDir(path).drop("bucket", "day").as[EventRow]
+      .repartition(partitions, $"decider_id").localCheckpoint()
     diskLayout = Some((dir,
       EventStore.storedBuckets(path, spark.sparkContext.hadoopConfiguration).getOrElse(buckets)))
     decidersMap.clear()
@@ -887,7 +872,7 @@ final class EventStore(val spark: SparkSession) {
     val heads = base.agg(max($"offset"), max($"transaction_id")).collect().headOption
     headOffset = heads.flatMap(r => Option(r.get(0)).map(_.asInstanceOf[Long])).getOrElse(0L)
     nextTxn = heads.flatMap(r => Option(r.get(1)).map(_.asInstanceOf[Long])).getOrElse(0L) + 1
-    log = new Log(base, materialized = true, headOffset, Vector.empty, headOffset)
+    log = new Log(base, headOffset, Vector.empty, headOffset)
   }
 }
 
@@ -901,9 +886,10 @@ object EventStore {
   /** Bucket count of a version directory; Spark's reader skips `_` files. */
   private val BucketsFile = "_buckets"
 
-  /** The `bucket=` partition a stream key lands in: the writer's own
-    * expression, `pmod(hash(decider_id), buckets)`, evaluated on the
-    * driver.
+  /** The `bucket=` directory, or the base partition, a stream key lands
+    * in among `buckets`: the expression of the writer's `bucket` column
+    * and of Spark's `HashPartitioning`, `pmod(hash(decider_id),
+    * buckets)`, evaluated on the driver.
     */
   private[store] def bucketOf(deciderId: String, buckets: Int): Int = {
     import org.apache.spark.sql.catalyst.expressions.{Literal, Murmur3Hash, Pmod}
@@ -951,8 +937,9 @@ object EventStore {
                            n_committed: Long, eid_rank: Int)
 
   /** Batches at or below this size validate through the driver-side
-    * fast path (two narrow lookup jobs + [[replayStream]] locally);
-    * larger batches run the distributed join/window pipeline. The
+    * fast path (the membership sketches, or one probe-fold job, then
+    * [[replayStream]] locally); larger batches run the distributed
+    * join/window pipeline. The
     * semantics are identical — replayStream IS the shared replay — the
     * fast path only changes where the (bounded) flag computation runs.
     */

@@ -178,9 +178,12 @@ final class FsMutex(dir: Path,
 
   private def claimPath(e: Long): Path = new Path(dir, f"$prefix$e%020d")
 
+  /** Decided from claim names alone ([[AtomicFs.names]]): a listing
+    * that stats its entries can lose a live claim its holder renews
+    * mid-listing, and a claimant trusting it could join a live holder.
+    */
   private def claimSeqs(): Seq[Long] =
-    AtomicFs.list(fs, dir).map(_.getPath.getName)
-      .collect { case claimName(d) => d.toLong }.sorted
+    AtomicFs.names(fs, dir).collect { case claimName(d) => d.toLong }.sorted
 
   /** The claim's (owner, expiry). Unreadable content reads as a foreign
     * hold expiring `ttlMs` past the file's mtime. None when the claim is

@@ -304,22 +304,22 @@ final class ViewStreams(val store: EventStore) {
     *     broadcast (≤ limit rows).
     *  4. Fetch the winning rows (J2), global ORDER BY offset.
     *
-    * Stages 3+4 are ONE job, ONE scan of the log, and ZERO exchanges:
-    * a per-task fold keeps the min-offset event per leased partition
+    * Stages 3+4 are ONE job with ZERO exchanges, over the leased
+    * streams' base partitions alone ([[EventStore.foldStreams]]: the
+    * log is hash-partitioned by stream, so the driver knows which
+    * partitions hold them) plus their tail rows on the driver. A
+    * per-task fold keeps the min-offset event per leased partition
     * (offsets are globally unique, so the head is exactly the rank-1
     * window row of the declarative spelling), the ≤ leased×tasks
     * partials collect, and the driver finishes the min and the
-    * presentation sort over ≤ limit rows. The fold runs on an RDD
-    * CACHED per log version ([[EventStore.logRdd]]): a poll loop re-running a
+    * presentation sort over ≤ limit rows. The fold runs on the base's
+    * RDD, which is planned once per base: a poll loop re-running a
     * DataFrame pipeline would pay Catalyst
     * analysis/optimization/codegen PER ROUND — measured as most of
     * each round's wall at drain batch sizes, with two exchanges
-    * (window + presentation sort) on top — where the RDD re-plans only
-    * when the log version changes. The log is not scanned a second
-    * time for the fetch. Per-row work is one hash probe + compare, so
-    * at production log sizes the scan I/O dominates exactly as it did
-    * the join+window form (which a filter-pushdown could not prune
-    * either — the leased bound is per-partition, not global).
+    * (window + presentation sort) on top. Per-row work is one hash
+    * probe + compare, and a poll reads at most `limit` partitions of
+    * the log, not all of it.
     *
     * `FOR UPDATE SKIP LOCKED` has no Spark analogue and needs none:
     * lock state is single-owner per key (SURVEY §7.4.3); concurrent
@@ -344,21 +344,20 @@ final class ViewStreams(val store: EventStore) {
     }
     if (leased.isEmpty) return Nil
 
-    // Stage 3+4: one job, one scan, zero exchanges (see pipeline doc).
+    // Stage 3+4: one job over the leased streams' partitions, zero
+    // exchanges (see pipeline doc).
     val bounds = leased.map(l => l.decider_id -> l.last_offset).toMap
-    val partials = store.logRdd.mapPartitions { it =>
+    val partials = store.foldStreams(bounds.keySet) { it =>
       val best = scala.collection.mutable.HashMap.empty[String, EventRow]
       it.foreach { e =>
-        bounds.get(e.decider_id) match {
-          case Some(lo) if e.offset > lo =>
-            val cur = best.get(e.decider_id)
-            if (cur.isEmpty || e.offset < cur.get.offset)
-              best(e.decider_id) = e
-          case _ => ()
+        if (e.offset > bounds(e.decider_id)) {
+          val cur = best.get(e.decider_id)
+          if (cur.isEmpty || e.offset < cur.get.offset)
+            best(e.decider_id) = e
         }
       }
-      best.valuesIterator
-    }.collect()
+      best.values.toVector
+    }.flatten
     partials.groupBy(_.decider_id).values
       .map(_.minBy(_.offset)).toSeq.sortBy(_.offset)
   }

@@ -316,7 +316,13 @@ class IndexCompactionSpec extends SparkSpec {
         appended = true
       })
       t.start()
-      Thread.sleep(2000)
+      // bounded wait until the rival is at the lock: its stack is inside
+      // the mutex's acquire loop, which it cannot leave while we hold it
+      def atLock = t.getStackTrace.exists(f =>
+        f.getClassName == "graft.store.FsMutex" && f.getMethodName == "acquire")
+      val deadline = System.nanoTime() + 60L * 1000 * 1000 * 1000
+      while (!atLock && !appended && System.nanoTime() < deadline) Thread.sleep(5)
+      assert(atLock, "the rival append did not reach the maintenance lock")
       assert(!appended, "append ran inside a held maintenance lock")
       t
     }

@@ -7,14 +7,14 @@ import java.util.concurrent.atomic.{AtomicBoolean, AtomicLong}
 import scala.jdk.CollectionConverters._
 import graft.SparkSpec
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-import org.apache.spark.sql.execution.FileSourceScanExec
 import org.apache.spark.sql.functions.{hash, lit, pmod}
 
 /** What a single-stream command costs on a saved-and-loaded log, and
   * the on-disk facts that cost depends on:
   *  - appends after the first run one job each over a fixed number of
   *    tasks (no whole-log copy per commit, no partition per commit);
-  *  - a stream read lists exactly its `bucket=K` directory;
+  *  - a stream read runs one task on its stream's partition of the
+  *    in-memory base and reads no file;
   *  - a tail folded into the base still reads, compacts and flushes;
   *  - the bucket count travels with the log;
   *  - the `_current` pointer is never absent while it is republished.
@@ -100,14 +100,14 @@ class EventLogCostSpec extends SparkSpec {
     s.save(dir, buckets = 8)
     val s2 = new EventStore(spark)
     s2.load(dir)
-    val k = writerBucket("order-1", 8)
-    val scan = s2.getEvents("order-1", "Order")
-    val roots = scan.queryExecution.sparkPlan.collect {
-      case f: FileSourceScanExec => f.relation.location.rootPaths.map(_.toUri.getPath)
-    }.flatten
+    val k = writerBucket("order-1", spark.sparkContext.defaultParallelism)
     val versionDir = EventStore.resolveEventsPath(dir, spark.sparkContext.hadoopConfiguration)
-    assert(roots === Seq(s"$versionDir/bucket=$k"))
+    val probe = CallProbe.start(spark)
+    val scan = s2.getEvents("order-1", "Order")
     assert(scan.collect().map(_.event_id).toSeq === Seq("a1"))
+    // one job of one task, on the stream's hash partition of the
+    // in-memory base, reading no file
+    assert(probe.stop() === CallProbe.Cost(jobs = 1, taskPartitions = Seq(k), fileBytes = 0L))
 
     // a stream whose bucket has no directory on disk
     val present = Files.list(Paths.get(versionDir)).iterator().asScala

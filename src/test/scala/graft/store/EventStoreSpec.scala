@@ -199,13 +199,16 @@ class EventStoreSpec extends SparkSpec with graft.testkit.TestKitReported {
     s.save(dir, buckets = 8)
     val s2 = new EventStore(spark)
     s2.load(dir, buckets = 8)
+    val probe = CallProbe.start(spark)
     val scan = s2.getEvents("order-1", "Order")
     // correctness through the pruned path
     assert(scan.collect().map(_.event_id).toSeq === Seq("e1"))
-    // physical plan: the bucket predicate must land in PartitionFilters
-    val plan = scan.queryExecution.executedPlan.toString()
-    assert(plan.contains("PartitionFilters: [isnotnull(bucket"),
-      s"bucket predicate not pushed to partition pruning:\n$plan")
+    // one job of one task, on the stream's hash partition of the
+    // in-memory base, reading no file
+    val cost = probe.stop()
+    assert(cost === CallProbe.Cost(jobs = 1,
+      taskPartitions = Seq(CallProbe.hashPartition(spark, "order-1")), fileBytes = 0L),
+      "the read did not run on the stream's partition alone")
     // appends invalidate the disk snapshot (no stale pruned reads)
     s2.now = () => new Timestamp(1700000000001L)
     s2.appendEvent(ev("e2", event = "OrderShipped", prev = Some("e1")))

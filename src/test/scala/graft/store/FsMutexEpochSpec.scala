@@ -3,7 +3,7 @@ package graft.store
 import java.sql.Timestamp
 import java.util.concurrent.{CountDownLatch, TimeUnit}
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{FileStatus, FileSystem, FilterFileSystem, Path}
+import org.apache.hadoop.fs.{FSDataInputStream, FileSystem, FilterFileSystem, Path}
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Epochs only grow: a release must not let the next claimant restart
@@ -13,21 +13,20 @@ import org.scalatest.funsuite.AnyFunSuite
   */
 class FsMutexEpochSpec extends AnyFunSuite with graft.testkit.TestKitReported {
 
-  /** Stalls the first `listStatus` of the thread that arms it, after
-    * the listing and before the caller acts on it.
+  /** Stalls the first `open` (the read of the top claim it listed),
+    * after the caller's listing and before it acts on it.
     */
   private final class StallingFs(inner: FileSystem) extends FilterFileSystem(inner) {
     val listed = new CountDownLatch(1)
     val resume = new CountDownLatch(1)
     @volatile var armed = true
-    override def listStatus(p: Path): Array[FileStatus] = {
-      val out = super.listStatus(p)
+    override def open(p: Path, bufferSize: Int): FSDataInputStream = {
       if (armed) {
         armed = false
         listed.countDown()
         resume.await(60, TimeUnit.SECONDS)
       }
-      out
+      super.open(p, bufferSize)
     }
   }
 
