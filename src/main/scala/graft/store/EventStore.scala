@@ -5,8 +5,12 @@ import scala.reflect.ClassTag
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileSystem, Path => HPath}
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoders, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
 import org.apache.spark.sql.functions._
+import org.apache.spark.unsafe.types.UTF8String
+import org.apache.spark.util.sketch.BloomFilter
 
 /** Spark-native event store with the reference's event-sourcing API
   * surface (reference schema.sql:325-367; SURVEY §2.1, §2.9, §3.1).
@@ -50,17 +54,24 @@ import org.apache.spark.sql.functions._
   *    version's files, so `save`/`compact` keep it.
   *  - The TAIL is the driver-resident rows committed since, shown to
   *    Spark as a LocalRelation. A commit appends to it and copies
-  *    nothing, so a single-event append costs its validation job alone
+  *    nothing, so a single-event append costs its validation alone
   *    and adds no partition to later scans. The tail folds into the
   *    base when it reaches [[EventStore.TailMaxRows]].
   *
   * A read of one stream ([[getEvents]], [[getLastEvent]]) and the
   * delivery fetch ([[ViewStreams.streamEvents]]) run on the base
-  * partitions of their streams alone, one task each, plus the matching
-  * tail rows on the driver ([[foldStreams]]): no file listing, no plan
-  * over the log, and work proportional to one partition — the Spark
-  * analogue of the reference's (decider_id, decider) index probe
-  * (schema.sql:56).
+  * partitions of their streams alone, one task each, decoding only
+  * those streams' rows, plus the matching tail rows on the driver
+  * ([[foldStreams]]): no file listing, no plan over the log, and work
+  * proportional to one partition — the Spark analogue of the
+  * reference's (decider_id, decider) index probe (schema.sql:56). A
+  * stream whose base rows an earlier read has bounded needs no task
+  * for the rows past that bound, so delivering an event appended
+  * since the base to a stream read or appended before runs no job.
+  * Validating a single append is driver work over Bloom sketches of
+  * the log (which [[load]] builds) and the stream's exact state (see
+  * the fast-path block): the OLTP command, read a stream and append
+  * on its head, runs one job of one task in all.
   *
   * Scale notes (100 TB): validation joins against the committed log are
   * key-pruned — the batch's distinct `(decider, decider_id)` pairs are
@@ -108,13 +119,6 @@ final class EventStore(val spark: SparkSession) {
   private final class Log(val base: Dataset[EventRow], val baseHead: Long,
                           val tail: Vector[EventRow], val flushed: Long) {
     lazy val all: Dataset[EventRow] = if (tail.isEmpty) base else base.union(tail.toDS())
-    /** The log as an RDD, planned once per snapshot (`Dataset.rdd` is
-      * itself memoized per base), for per-task folds that must not pay
-      * a Catalyst pass per call.
-      */
-    lazy val rdd: RDD[EventRow] =
-      if (tail.isEmpty) base.rdd
-      else base.rdd.union(spark.sparkContext.parallelize(tail, 1))
 
     /** Unflushed rows: the driver-held tail alone, unless a bulk commit
       * or a tail fold since the last flush left unflushed rows in the
@@ -273,72 +277,158 @@ final class EventStore(val spark: SparkSession) {
     */
   private[store] def baseRdd: RDD[EventRow] = log.base.rdd
 
-  /** `f` over the committed rows of the streams `ids`: once per base
-    * partition holding one of them — one task each, in one job, on the
-    * partitions computed on the driver — and once, on the driver, over
-    * the tail's rows of those streams (the last result). No file is
-    * listed or read and no query is planned; an empty base runs no
-    * job. Shared by the single-stream reads and the delivery fetch.
+  /** Decodes a base row into an [[EventRow]]. Every base has the
+    * encoder's column order (`load` reads the version with the
+    * encoder's schema; the other bases are built from `EventRow`s).
     */
-  private[store] def foldStreams[U: ClassTag](ids: Set[String])(f: Iterator[EventRow] => U): Seq[U] = {
-    val l = log
-    val onRows = (it: Iterator[EventRow]) => f(it.filter(e => ids(e.decider_id)))
-    val fromBase =
-      if (l.baseHead == 0L || ids.isEmpty) Nil
-      else spark.sparkContext.runJob(l.base.rdd, onRows, ids.toSeq.map(partitionOf).distinct.sorted).toSeq
-    fromBase :+ onRows(l.tail.iterator)
+  private val decodeRow = ExpressionEncoder[EventRow]().resolveAndBind().createDeserializer()
+
+  /** `f` over the base rows of partitions `parts` that pass `keep`, one
+    * task per partition, in one job. `keep` reads the undecoded row, so
+    * only the rows it passes pay the decoding into [[EventRow]]s (each
+    * task decodes with its own copy of [[decodeRow]]).
+    */
+  private def foldBase[U: ClassTag](l: Log, parts: Seq[Int])(keep: InternalRow => Boolean)
+                                  (f: Iterator[EventRow] => U): Seq[U] = {
+    val decode = decodeRow
+    spark.sparkContext.runJob(l.base.queryExecution.toRdd,
+      (it: Iterator[InternalRow]) => f(it.filter(keep).map(decode)), parts).toSeq
   }
 
+  /** What the reads of one base have learned of its streams: per
+    * stream, an upper bound on its highest offset in that base
+    * (`Long.MinValue`: no row there). A read that wants only the rows
+    * past the bound needs no task ([[foldStreamsOf]]). A base never
+    * changes, so the bounds hold for as long as it is the live one.
+    * Bounded LRU; eviction only costs a task.
+    */
+  private final class BaseHeads(val base: Dataset[EventRow]) {
+    private val bound = scala.collection.mutable.LinkedHashMap.empty[String, Long]
+    def get(id: String): Option[Long] = synchronized(bound.get(id))
+    def note(id: String, head: Long): Unit = synchronized {
+      bound.remove(id) // re-insert = LRU touch
+      bound(id) = head
+      while (bound.size > HotStreamCap) bound.remove(bound.head._1)
+    }
+  }
+  @volatile private var baseHeads = new BaseHeads(log.base)
+
+  private def baseHeadsOf(l: Log): BaseHeads = {
+    val h = baseHeads
+    if (h.base eq l.base) h else { val fresh = new BaseHeads(l.base); baseHeads = fresh; fresh }
+  }
+
+  /** `f` over the committed rows of snapshot `l` of the streams keyed
+    * in `after` whose offset exceeds the stream's value there
+    * (`Long.MinValue`: the whole stream, [[EventStore.wholeStreams]]):
+    * once per base partition holding such rows — one task each, in one
+    * job, on the partitions computed on the driver, decoding only those
+    * rows — and once, on the driver, over the tail's (the last result).
+    * A stream whose base rows a read of this base has shown to lie at
+    * or below its value ([[BaseHeads]]) needs no task, so a delivery
+    * fetch of rows committed since the base, of streams read before, is
+    * driver work alone. No file is listed or read and no query is
+    * planned; an empty base runs no job. Shared by the single-stream
+    * reads, the delivery fetch and append validation.
+    */
+  private def foldStreamsOf[U: ClassTag](l: Log, after: Map[String, Long])(f: Iterator[EventRow] => U): Seq[U] = {
+    val heads = baseHeadsOf(l)
+    val read =
+      if (l.baseHead == 0L) Map.empty[String, Long]
+      else after.filterNot { case (id, from) => heads.get(id).exists(_ <= from) }
+    val fromBase =
+      if (read.isEmpty) Nil
+      else {
+        val readUtf8 = read.map { case (id, from) => UTF8String.fromString(id) -> from }
+        val parts = foldBase(l, read.keys.toSeq.map(partitionOf).distinct.sorted)(r =>
+          readUtf8.get(r.getUTF8String(EventStore.DeciderIdCol)).exists(r.getLong(EventStore.OffsetCol) > _)) { it =>
+          val rows = it.toVector
+          (f(rows.iterator), rows.groupMapReduce(_.decider_id)(_.offset)(math.max))
+        }
+        // no row past `from` bounds the stream's base rows by `from`
+        val highest = parts.flatMap(_._2).toMap
+        read.foreach { case (id, from) => heads.note(id, highest.getOrElse(id, from)) }
+        parts.map(_._1)
+      }
+    fromBase :+ f(l.tail.iterator.filter(e => after.get(e.decider_id).exists(e.offset > _)))
+  }
+
+  /** [[foldStreamsOf]] on the live log. */
+  private[store] def foldStreams[U: ClassTag](after: Map[String, Long])(f: Iterator[EventRow] => U): Seq[U] =
+    foldStreamsOf(log, after)(f)
+
   // ------------------------------------------------------------------
-  // OLTP fast path: membership sketches + hot-stream cache.
+  // OLTP fast path: membership sketches + exact stream states.
   //
   // The reference wins the sequential single-append shape outright
   // (µs B-tree probes vs ~100 ms of Spark job overhead per validation
   // lookup). The fix is driver state that answers the validation
   // questions withOUT a job — but ONLY when it can answer them
-  // EXACTLY; anything uncertain falls back to the job path, so the
-  // semantics cannot diverge:
+  // EXACTLY; anything uncertain falls back to a job, so the semantics
+  // cannot diverge:
   //
-  //  - `idSketch` / `prevSketch` / `streamSketch`: Bloom filters over
-  //    ALL committed event_ids, claimed previous_ids, and stream keys.
-  //    While `sketchComplete` holds (fresh store, or after
-  //    [[enableFastAppend]] seeds them from the log in one distributed
-  //    pass) a MISS is definitive — the id/prev/stream is certainly
-  //    absent — and that is the only answer the fast path trusts; a
-  //    hit (present OR false positive) routes to the jobs.
-  //  - `hotStreams`: exact (finalized, n, head event id) per stream
-  //    touched this session — maintained under commitLock at commit,
-  //    so the chained-append shape (prev = current head) resolves
-  //    prev-existence exactly. Bounded LRU; eviction only costs the
-  //    fast path.
+  //  - `sketch`: Bloom filters over ALL committed event_ids, claimed
+  //    previous_ids, and stream keys. While `sketchComplete` holds
+  //    (fresh store; after `load`, which builds them in the job that
+  //    finds the heads; after [[enableFastAppend]]) a MISS is
+  //    definitive — the id/prev/stream is certainly absent — and that
+  //    is the only answer the fast path trusts; an id or prev hit
+  //    (present OR false positive) routes to the whole-log probe job.
+  //  - `hotStreams`: exact (finalized, n > 0, head event id) per stream
+  //    — maintained under commitLock at commit, so the chained-append
+  //    shape (prev = current head) resolves prev-existence exactly.
+  //    A stream that is not hot takes its state from the last
+  //    [[getEvents]] while the log it read is still the live one, or
+  //    else from one [[foldStreams]] task on its own partition. Bounded
+  //    LRU; eviction only costs that task.
   //
-  // commitBulk / load() set sketchComplete = false (rows not seen by
-  // the driver); enableFastAppend re-seeds. Shared-log replicas fold
-  // rivals' commits through commitBulk, so the fast path self-disables
-  // in shared mode — conservative, never wrong.
+  // commitBulk sets sketchComplete = false (rows not seen by the
+  // driver); enableFastAppend re-seeds. Shared-log replicas fold small
+  // rival commits through commitReplicated, which keeps the sketches;
+  // a big one goes through commitBulk and disables the fast path —
+  // conservative, never wrong.
 
-  private var idSketch = org.apache.spark.util.sketch.BloomFilter.create(1 << 20, 0.01)
-  private var prevSketch = org.apache.spark.util.sketch.BloomFilter.create(1 << 20, 0.01)
-  private var streamSketch = org.apache.spark.util.sketch.BloomFilter.create(1 << 20, 0.01)
+  private var sketch = new EventStore.LogSketch(EventStore.SketchItems, 0.01)
   private var sketchComplete = true
   private final case class HotStream(finalized: Boolean, n: Long, headId: Option[String])
+  private object HotStream {
+    /** The state of one stream from all its committed rows. */
+    def of(rows: Seq[EventRow]): HotStream =
+      HotStream(rows.exists(_.is_final), rows.size.toLong, rows.maxByOption(_.offset).map(_.event_id))
+  }
   private val hotStreams =
     scala.collection.mutable.LinkedHashMap.empty[(String, String), HotStream]
   private val HotStreamCap = 65536
 
-  /** Re-seed the membership sketches from the committed log (one
-    * distributed pass over three narrow columns) and re-arm the
-    * zero-job append fast path after a load()/bulk ingest. Sketch
-    * memory is ~1.2 MB per 10⁶ ids at 1% fpp — size `fpp` down (or
-    * skip enabling) if driver memory is tighter than append latency.
+  /** The state [[getEvents]] last read, with the snapshot it read (held
+    * weakly, so a stale read keeps no base alive).
+    */
+  private final class StreamRead(val at: java.lang.ref.WeakReference[Log],
+                                 val key: (String, String), val state: HotStream)
+  @volatile private var lastRead: Option[StreamRead] = None
+
+  /** Sketch `base` in one job: each partition sketches its
+    * rows ([[EventStore.LogSketch]]), and the driver merges each
+    * partition's sketch as it arrives.
+    */
+  private def sketchBase(base: Dataset[EventRow], items: Long, fpp: Double): EventStore.LogSketch = {
+    val merged = new EventStore.LogSketch(items, fpp)
+    spark.sparkContext.runJob(base.queryExecution.toRdd,
+      (it: Iterator[InternalRow]) => { val s = new EventStore.LogSketch(items, fpp); it.foreach(s.add); s },
+      (_: Int, s: EventStore.LogSketch) => merged.merge(s))
+    merged
+  }
+
+  /** Re-seed the membership sketches from the committed log (one job
+    * over the base, the tail on the driver) and re-arm the zero-job
+    * append fast path after a bulk ingest. Sketch memory is ~1.2 MB
+    * per 10⁶ ids at 1% fpp — size `fpp` down (or skip enabling) if
+    * driver memory is tighter than append latency.
     */
   def enableFastAppend(fpp: Double = 0.01): Unit = commitLock.synchronized {
-    val n = math.max(1024L, headOffset * 2)
-    val df = log.all.toDF()
-    idSketch = df.stat.bloomFilter("event_id", n, fpp)
-    prevSketch = df.filter($"previous_id".isNotNull).stat.bloomFilter("previous_id", n, fpp)
-    streamSketch = df.select(concat_ws("|", $"decider", $"decider_id").as("sk"))
-      .stat.bloomFilter("sk", n, fpp)
+    val l = log
+    sketch = sketchBase(l.base, math.max(1024L, headOffset * 2), fpp)
+    l.tail.foreach(sketch.add)
     hotStreams.clear()
     sketchComplete = true
   }
@@ -347,62 +437,83 @@ final class EventStore(val spark: SparkSession) {
     * commitLock).
     */
   private def noteCommitted(accepted: Seq[EventRow]): Unit = {
-    accepted.foreach { e =>
-      idSketch.putString(e.event_id)
-      e.previous_id.foreach(prevSketch.putString)
-      streamSketch.putString(s"${e.decider}|${e.decider_id}")
-    }
+    accepted.foreach(sketch.add)
     accepted.groupBy(e => (e.decider, e.decider_id)).foreach { case (k, es) =>
       val prior = hotStreams.remove(k) // re-insert = LRU touch
       val fin = prior.exists(_.finalized) || es.exists(_.is_final)
       val n = prior.map(_.n).getOrElse(0L) + es.size
-      hotStreams(k) = HotStream(fin, n, Some(es.last.event_id))
+      remember(k, HotStream(fin, n, Some(es.last.event_id)))
     }
+  }
+
+  private def remember(k: (String, String), h: HotStream): Unit = {
+    hotStreams(k) = h
     while (hotStreams.size > HotStreamCap) hotStreams.remove(hotStreams.head._1)
   }
 
-  /** Zero-job validation: Some(flags) when EVERY row of the batch is
-    * exactly answerable from the sketches + hot cache, None otherwise
-    * (caller runs the job path). Accept decisions only ever ride on
-    * definitive answers: sketch MISSES and session-exact cache hits.
+  /** Make every stream of `keys` that the sketch may hold hot: from the
+    * last read when it read the live log, else from one [[foldStreams]]
+    * job over their partitions. Either state is exact for the live log,
+    * which cannot change under commitLock (caller holds it).
+    */
+  private def makeHot(keys: Seq[(String, String)]): Unit = {
+    val cold = keys.filter(k => !hotStreams.contains(k) &&
+      sketch.streams.mightContainString(EventStore.streamKey(k._1, k._2)))
+    val l = log
+    val read = lastRead.filter(r => (r.at.get eq l) && cold.contains(r.key))
+    read.foreach(r => remember(r.key, r.state))
+    val rest = cold.filterNot(k => read.exists(_.key == k)).toSet
+    if (rest.nonEmpty) {
+      val rows = foldStreamsOf(l, EventStore.wholeStreams(rest.map(_._2)))(
+        _.filter(e => rest((e.decider, e.decider_id))).toVector).flatten
+      val byStream = rows.groupBy(e => (e.decider, e.decider_id))
+      rest.foreach(k => remember(k, HotStream.of(byStream.getOrElse(k, Nil))))
+    }
+  }
+
+  /** Validation with no job, or at most one task per stream partition:
+    * Some(flags) when EVERY row of the batch is exactly answerable from
+    * the sketches + exact stream states, None otherwise (caller runs
+    * the whole-log probe). Accept decisions only ever ride on definitive
+    * answers: sketch MISSES and exact stream states.
     */
   private def fastValidate(batch: Seq[EventInput]): Option[Seq[(EventInput, Long, String)]] = {
     if (!sketchComplete) return None
+    // maybe a duplicate id, or maybe a claimed previous id
+    if (batch.exists(e => sketch.ids.mightContainString(e.event_id) ||
+          e.previous_id.exists(sketch.prevs.mightContainString))) return None
+    makeHot(batch.map(e => (e.decider, e.decider_id)).distinct)
     val flagged = batch.zipWithIndex.map { case (e, idx) =>
-      val key = (e.decider, e.decider_id)
-      val hot = hotStreams.get(key)
-      val streamKnown = hot.isDefined || !streamSketch.mightContainString(s"${e.decider}|${e.decider_id}")
-      if (!streamKnown) return None // exists in log but not cached
+      // a stream the sketch misses is certainly absent: (false, 0)
+      val hot = hotStreams.get((e.decider, e.decider_id))
       val (fin, n) = hot.map(h => (h.finalized, h.n)).getOrElse((false, 0L))
-      if (idSketch.mightContainString(e.event_id)) return None // maybe dup
-      val (prevInStream, prevDup) = e.previous_id match {
-        case None => (false, false)
-        case Some(p) =>
-          if (prevSketch.mightContainString(p)) return None // maybe claimed
-          if (!idSketch.mightContainString(p)) (false, false) // definitely absent; intra-batch handled by replay
-          else if (hot.exists(_.headId.contains(p))) (true, false) // exact: the session head
-          else return None // committed somewhere, membership unknown
+      val prevInStream = e.previous_id.exists { p =>
+        if (!sketch.ids.mightContainString(p)) false // definitely absent; intra-batch handled by replay
+        else if (hot.exists(_.headId.contains(p))) true // exact: the stream's head
+        else return None // committed somewhere, membership unknown
       }
       val rank = batch.take(idx).count(_.event_id == e.event_id) + 1
       EventStore.Flagged(e, idx.toLong,
         decidersMap.contains((e.decider, e.event, e.event_version)),
         prev_in_stream = prevInStream, dup_event_id = false,
-        dup_prev_id = prevDup, finalized = fin, n_committed = n, eid_rank = rank)
+        dup_prev_id = false, finalized = fin, n_committed = n, eid_rank = rank)
     }
     Some(flagged.groupBy(f => (f.in.decider, f.in.decider_id))
       .values.toSeq.flatMap(EventStore.replayStream))
   }
 
   /** Driver-side fast path for bounded batches (≤ SmallBatchMax): when
-    * the sketches can answer exactly, validation is pure driver work
-    * ([[fastValidate]], zero jobs — the OLTP chained-append shape);
-    * otherwise the committed-log facts come from ONE job, one scan and
-    * no exchange: a per-task fold over the whole log (the
-    * [[ViewStreams.streamEvents]] stage 3+4 pattern) returns, per task,
-    * one state row per batch stream and the id/prev hits, and the
-    * driver merges them. The replay itself is [[EventStore.replayStream]],
-    * the same code the distributed path executes, so the semantics
-    * cannot diverge.
+    * the sketches and the exact stream states can answer, validation is
+    * pure driver work ([[fastValidate]], zero jobs — the OLTP
+    * chained-append shape — or one task per cold stream); otherwise the
+    * committed-log facts come from ONE job, one scan and no exchange: a
+    * per-task fold over the whole base (the [[ViewStreams.streamEvents]]
+    * stage 3+4 pattern), decoding only the rows of the batch's streams,
+    * ids and previous ids, returns per task one state row per batch
+    * stream and the id/prev hits; the tail folds on the driver and the
+    * driver merges them. The replay itself is
+    * [[EventStore.replayStream]], the same code the distributed path
+    * executes, so the semantics cannot diverge.
     */
   private[store] def smallBatchValidate(batch: Seq[EventInput]): Seq[(EventInput, Long, String)] = {
     fastValidate(batch) match {
@@ -414,9 +525,20 @@ final class EventStore(val spark: SparkSession) {
     }
     val batchIds = inputs.map(_._1.event_id).distinct
     val batchPrevs = inputs.flatMap(_._1.previous_id).distinct
-    val partials = log.rdd.mapPartitions(EventStore.probeFold(
-      inputs.map(t => (t._1.decider, t._1.decider_id)).toSet,
-      (batchIds ++ batchPrevs).toSet, batchPrevs.toSet)).collect()
+    val streams = inputs.map(t => (t._1.decider, t._1.decider_id)).toSet
+    val probed = (batchIds ++ batchPrevs).toSet
+    val prevs = batchPrevs.toSet
+    val fold = EventStore.probeFold(streams, probed, prevs)
+    val l = log
+    val streamIds = streams.map(_._2)
+    val fromBase =
+      if (l.baseHead == 0L) Nil
+      else foldBase(l, 0 until partitions)(r =>
+        streamIds(r.getUTF8String(EventStore.DeciderIdCol).toString) ||
+          probed(r.getUTF8String(EventStore.EventIdCol).toString) ||
+          (!r.isNullAt(EventStore.PreviousIdCol) &&
+            prevs(r.getUTF8String(EventStore.PreviousIdCol).toString)))(fold)
+    val partials = fromBase :+ fold(l.tail.iterator)
     // per-stream committed state (exists / finalized)
     val state: Map[(String, String), (Boolean, Long)] = partials.toSeq.flatMap(_._1)
       .groupMapReduce(_._1)(_._2) { case ((f1, n1), (f2, n2)) => (f1 || f2, n1 + n2) }
@@ -596,13 +718,19 @@ final class EventStore(val spark: SparkSession) {
   // Scans (reference get_events/get_last_event, schema.sql:348-367)
 
   /** The stream in offset order: its base partition's rows, read by one
-    * task ([[foldStreams]]), plus its tail rows, sorted on the driver —
-    * a stream is small. The result is driver-resident, so collecting it
-    * runs no further job.
+    * task that decodes only the stream's rows ([[foldStreams]]), plus
+    * its tail rows, sorted on the driver — a stream is small. The result
+    * is driver-resident, so collecting it runs no further job. The read
+    * also leaves the stream's exact state for validation: an append to
+    * it before the log changes runs no job ([[fastValidate]]).
     */
-  def getEvents(deciderId: String, decider: String): Dataset[EventRow] =
-    foldStreams(Set(deciderId))(_.filter(_.decider == decider).toVector)
-      .flatten.sortBy(_.offset).toDS()
+  def getEvents(deciderId: String, decider: String): Dataset[EventRow] = {
+    val l = log
+    val rows = foldStreamsOf(l, EventStore.wholeStreams(Seq(deciderId)))(_.filter(_.decider == decider).toVector)
+      .flatten.sortBy(_.offset)
+    lastRead = Some(new StreamRead(new java.lang.ref.WeakReference(l), (decider, deciderId), HotStream.of(rows)))
+    rows.toDS()
+  }
 
   /** All events with `created_at >= from` — the view-backfill access
     * path (register_view's event-time seek, schema.sql:376-393). At
@@ -638,7 +766,7 @@ final class EventStore(val spark: SparkSession) {
     * either.
     */
   def getLastEvent(deciderId: String): Option[EventRow] =
-    foldStreams(Set(deciderId))(_.maxByOption(_.offset)).flatten.maxByOption(_.offset)
+    foldStreams(EventStore.wholeStreams(Seq(deciderId)))(_.maxByOption(_.offset)).flatten.maxByOption(_.offset)
 
   def allEvents: Dataset[EventRow] = log.all
 
@@ -849,11 +977,15 @@ final class EventStore(val spark: SparkSession) {
   }
 
   /** Load the log at `dir` and checkpoint it as the base, partitioned by
-    * stream, in one job. Its bucket count is the one recorded with the
-    * version; `buckets` only serves logs written without that record.
+    * stream, in one job; a second job over the checkpoint finds the
+    * heads and builds the membership sketches, so appends after a
+    * restart keep the zero-job fast path. The sketches have the size a
+    * fresh store's have ([[EventStore.SketchItems]]): past that many
+    * rows they saturate, which only sends appends to the probe job. Its
+    * bucket count is the one recorded with the version; `buckets` only
+    * serves logs written without that record.
     */
   def load(dir: String, buckets: Int = 32): Unit = commitLock.synchronized {
-    sketchComplete = false // history not seen by the driver
     hotStreams.clear()
     val path = eventsPath(dir)
     // a restarted store decodes the version once, here: the head scan
@@ -869,9 +1001,10 @@ final class EventStore(val spark: SparkSession) {
         decidersMap((d.decider, d.event, d.event_version)) = d)
     // in-memory registry now equals the on-disk copy of THIS dir
     decidersSavedAt = Some((dir, decidersVersion))
-    val heads = base.agg(max($"offset"), max($"transaction_id")).collect().headOption
-    headOffset = heads.flatMap(r => Option(r.get(0)).map(_.asInstanceOf[Long])).getOrElse(0L)
-    nextTxn = heads.flatMap(r => Option(r.get(1)).map(_.asInstanceOf[Long])).getOrElse(0L) + 1
+    sketch = sketchBase(base, EventStore.SketchItems, 0.01)
+    sketchComplete = true
+    headOffset = sketch.head
+    nextTxn = sketch.txn + 1
     log = new Log(base, headOffset, Vector.empty, headOffset)
   }
 }
@@ -952,6 +1085,63 @@ object EventStore {
     */
   private[store] val TailMaxRows = 1024
 
+  /** Items each membership sketch is sized for: a fresh store's, and
+    * the cap of the sketches `load` builds.
+    */
+  private[store] val SketchItems: Long = 1L << 20
+
+  private val RowSchema = Encoders.product[EventRow].schema
+  /** Ordinals of the columns a base row is tested on before decoding. */
+  private[store] val DeciderCol = RowSchema.fieldIndex("decider")
+  private[store] val DeciderIdCol = RowSchema.fieldIndex("decider_id")
+  private[store] val EventIdCol = RowSchema.fieldIndex("event_id")
+  private[store] val PreviousIdCol = RowSchema.fieldIndex("previous_id")
+  private val OffsetCol = RowSchema.fieldIndex("offset")
+  private val TxnCol = RowSchema.fieldIndex("transaction_id")
+
+  private[store] def streamKey(decider: String, deciderId: String): String = s"$decider|$deciderId"
+
+  /** [[EventStore.foldStreams]]'s bounds for every row of the streams `ids`. */
+  private[store] def wholeStreams(ids: Iterable[String]): Map[String, Long] = ids.map(_ -> Long.MinValue).toMap
+
+  /** What the append fast path knows of a set of committed rows: their
+    * highest offset and transaction id, and Bloom filters over their
+    * event ids, claimed previous ids and stream keys, sized for `items`
+    * at `fpp`. Built per partition on the executors and merged on the
+    * driver, or grown row by row at commit.
+    */
+  private[store] final class LogSketch(items: Long, fpp: Double) extends Serializable {
+    var head = 0L
+    var txn = 0L
+    val ids: BloomFilter = BloomFilter.create(items, fpp)
+    val prevs: BloomFilter = BloomFilter.create(items, fpp)
+    val streams: BloomFilter = BloomFilter.create(items, fpp)
+
+    def add(r: InternalRow): Unit = {
+      head = math.max(head, r.getLong(OffsetCol))
+      txn = math.max(txn, r.getLong(TxnCol))
+      ids.putString(r.getUTF8String(EventIdCol).toString)
+      if (!r.isNullAt(PreviousIdCol)) prevs.putString(r.getUTF8String(PreviousIdCol).toString)
+      streams.putString(streamKey(r.getUTF8String(DeciderCol).toString, r.getUTF8String(DeciderIdCol).toString))
+    }
+
+    def add(e: EventRow): Unit = {
+      head = math.max(head, e.offset)
+      txn = math.max(txn, e.transaction_id)
+      ids.putString(e.event_id)
+      e.previous_id.foreach(prevs.putString)
+      streams.putString(streamKey(e.decider, e.decider_id))
+    }
+
+    def merge(o: LogSketch): Unit = {
+      head = math.max(head, o.head)
+      txn = math.max(txn, o.txn)
+      ids.mergeInPlace(o.ids)
+      prevs.mergeInPlace(o.prevs)
+      streams.mergeInPlace(o.streams)
+    }
+  }
+
   /** A committed row the small-batch validation probe matched. */
   private[store] final case class Hit(event_id: String, previous_id: Option[String],
                        decider: String, decider_id: String)
@@ -963,7 +1153,7 @@ object EventStore {
     * and unique ids/prevs allow at most two hits per probed value.
     */
   private[store] def probeFold(streams: Set[(String, String)], ids: Set[String], prevs: Set[String])
-      : Iterator[EventRow] => Iterator[(Map[(String, String), (Boolean, Long)], Vector[Hit])] = { it =>
+      : Iterator[EventRow] => (Map[(String, String), (Boolean, Long)], Vector[Hit]) = { it =>
     val state = scala.collection.mutable.HashMap.empty[(String, String), (Boolean, Long)]
     val hits = Vector.newBuilder[Hit]
     it.foreach { e =>
@@ -975,7 +1165,7 @@ object EventStore {
       if (ids(e.event_id) || e.previous_id.exists(prevs))
         hits += Hit(e.event_id, e.previous_id, e.decider, e.decider_id)
     }
-    Iterator.single((state.toMap, hits.result()))
+    (state.toMap, hits.result())
   }
 
   /** Per-stream sequential replay: the reference's trigger pipeline in

@@ -308,6 +308,10 @@ final class ViewStreams(val store: EventStore) {
     * streams' base partitions alone ([[EventStore.foldStreams]]: the
     * log is hash-partitioned by stream, so the driver knows which
     * partitions hold them) plus their tail rows on the driver. A
+    * stream whose base rows an earlier read showed to be all at or
+    * below `last_offset` needs no task, so delivering what was
+    * appended since the base, to streams read or appended before, runs
+    * no job. A
     * per-task fold keeps the min-offset event per leased partition
     * (offsets are globally unique, so the head is exactly the rank-1
     * window row of the declarative spelling), the ≤ leased×tasks
@@ -344,17 +348,16 @@ final class ViewStreams(val store: EventStore) {
     }
     if (leased.isEmpty) return Nil
 
-    // Stage 3+4: one job over the leased streams' partitions, zero
-    // exchanges (see pipeline doc).
+    // Stage 3+4: at most one job over the leased streams' partitions,
+    // zero exchanges (see pipeline doc); only rows past each stream's
+    // `last_offset` reach the fold.
     val bounds = leased.map(l => l.decider_id -> l.last_offset).toMap
-    val partials = store.foldStreams(bounds.keySet) { it =>
+    val partials = store.foldStreams(bounds) { it =>
       val best = scala.collection.mutable.HashMap.empty[String, EventRow]
       it.foreach { e =>
-        if (e.offset > bounds(e.decider_id)) {
-          val cur = best.get(e.decider_id)
-          if (cur.isEmpty || e.offset < cur.get.offset)
-            best(e.decider_id) = e
-        }
+        val cur = best.get(e.decider_id)
+        if (cur.isEmpty || e.offset < cur.get.offset)
+          best(e.decider_id) = e
       }
       best.values.toVector
     }.flatten

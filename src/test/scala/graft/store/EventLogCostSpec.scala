@@ -11,8 +11,8 @@ import org.apache.spark.sql.functions.{hash, lit, pmod}
 
 /** What a single-stream command costs on a saved-and-loaded log, and
   * the on-disk facts that cost depends on:
-  *  - appends after the first run one job each over a fixed number of
-  *    tasks (no whole-log copy per commit, no partition per commit);
+  *  - the first append runs at most one task, and appends after it run
+  *    no job (no whole-log copy per commit, no partition per commit);
   *  - a stream read runs one task on its stream's partition of the
   *    in-memory base and reads no file;
   *  - a tail folded into the base still reads, compacts and flushes;
@@ -81,13 +81,13 @@ class EventLogCostSpec extends SparkSpec {
         prev = id
       }
       jobs.settle()
-      // load checkpointed the version: the first append reads no files either
-      assert(jobs.of("append-0").size <= 1, s"jobs of the first append: ${jobs.of("append-0").size}")
+      // load built the membership sketches: the first append learns its
+      // stream's state from at most one task on the stream's partition,
+      // and every later one validates on the driver with no job at all
+      val first = jobs.of("append-0")
+      assert(first.size <= 1 && first.forall(_ == 1), s"tasks of the first append's jobs: $first")
       val later = (1 to 20).map(i => jobs.of(s"append-$i"))
-      assert(later.forall(_.size <= 1), s"jobs per append after the first: ${later.map(_.size)}")
-      val tasks = later.flatten
-      assert(tasks.nonEmpty && tasks.forall(_ == tasks.head),
-        s"tasks per append job grew: $tasks")
+      assert(later.forall(_.isEmpty), s"jobs per append after the first: ${later.map(_.size)}")
     } finally spark.sparkContext.removeSparkListener(jobs)
     assert(s2.getEvents("order-1", "Order").collect().map(_.event_id).toSeq ===
       "seed-1" +: (0 to 20).map(i => s"chain-$i"))

@@ -171,16 +171,109 @@ class StreamPartitionSpec extends SparkSpec {
       assert(cost === CallProbe.Cost(jobs = 2, taskPartitions = Seq(part, part), fileBytes = 0L), id)
     }
 
-    // a caught-up view; one new event leaves exactly one stream to deliver
+    // a view from before the log: a one-stream poll delivers a base row
     val vs = new ViewStreams(s2)
-    vs.registerView("v", startAt = Some(new Timestamp(t0 + 3600000L)))
-    s2.appendEvent(ev("order-5-e2", "order-5", Some("order-5-e1")))
+    vs.registerView("v", startAt = Some(new Timestamp(t0 - 1)))
     val probe = CallProbe.start(spark)
-    val delivered = vs.streamEvents("v", limit = 16)
+    val delivered = vs.streamEvents("v", limit = 1)
     val cost = probe.stop()
-    assert(delivered.map(_.event_id) === Seq("order-5-e2"))
+    assert(delivered.map(_.event_id) === Seq("order-1-e1"))
     assert(cost === CallProbe.Cost(jobs = 1,
-      taskPartitions = Seq(CallProbe.hashPartition(spark, "order-5")), fileBytes = 0L))
+      taskPartitions = Seq(CallProbe.hashPartition(spark, "order-1")), fileBytes = 0L))
+
+    // a caught-up view: order-5's read above bounded its base rows by
+    // its head, which the view starts past, so its new event is fetched
+    // with no job
+    vs.registerView("w", startAt = Some(new Timestamp(t0 + 3600000L)))
+    s2.appendEvent(ev("order-5-e2", "order-5", Some("order-5-e1")))
+    val again = CallProbe.start(spark)
+    val next = vs.streamEvents("w", limit = 16)
+    val againCost = again.stop()
+    assert(next.map(_.event_id) === Seq("order-5-e2"))
+    assert(againCost === CallProbe.Cost(jobs = 0, taskPartitions = Nil, fileBytes = 0L))
+  }
+
+  test("a poll skips a stream's base partition only when its base rows are all delivered") {
+    val s = freshStore()
+    s.append(Seq(ev("a1", "order-1"), ev("a2", "order-1", Some("a1")), ev("b1", "order-2")))
+    val dir = tmp("estore_pollskip")
+    s.save(dir, buckets = 4)
+    val s2 = freshStore()
+    s2.load(dir)
+    // the read learns order-1's base head (a2); the view starts before a1
+    assert(s2.getEvents("order-1", "Order").collect().map(_.event_id).toSeq === Seq("a1", "a2"))
+    val vs = new ViewStreams(s2)
+    vs.registerView("v", startAt = Some(new Timestamp(t0 - 1)))
+    s2.appendEvent(ev("a3", "order-1", Some("a2")))
+    def pollOrder1(): (Seq[String], CallProbe.Cost) = {
+      val probe = CallProbe.start(spark)
+      val got = vs.streamEvents("v", limit = 16).filter(_.decider_id == "order-1")
+      val cost = probe.stop()
+      vs.ackBatch("v", got.map(e => (e.decider_id, e.offset)))
+      (got.map(_.event_id), cost)
+    }
+    val onePart = CallProbe.hashPartition(spark, "order-1")
+    // a1 and a2 sit in the base past the view's cursor: the poll reads it
+    val (first, firstCost) = pollOrder1()
+    assert(first === Seq("a1"))
+    assert(firstCost.jobs === 1)
+    assert(firstCost.taskPartitions.contains(onePart))
+    val (second, secondCost) = pollOrder1()
+    assert(second === Seq("a2"))
+    assert(secondCost.jobs === 1)
+    // past a2 only the tail holds order-1's rows
+    val (third, thirdCost) = pollOrder1()
+    assert(third === Seq("a3"))
+    assert(thirdCost === CallProbe.Cost(jobs = 0, taskPartitions = Nil, fileBytes = 0L))
+  }
+
+  test("polls deliver every stream's events once, in offset order, on random read/append/poll/bulk/flush schedules") {
+    Seq(7L, 19L, 43L).foreach { seed =>
+      val rng = new Random(seed)
+      val streams = (1 to 12).map(i => s"order-$i")
+      val s = freshStore()
+      assert(s.append(streams.flatMap(id => Seq(ev(s"$id-e1", id), ev(s"$id-e2", id, Some(s"$id-e1"))))).rejected.isEmpty)
+      val dir = tmp(s"estore_polldiff_$seed")
+      s.save(dir, buckets = 4)
+      val w = freshStore()
+      w.load(dir)
+      val vs = new ViewStreams(w)
+      vs.registerView("v", startAt = Some(new Timestamp(t0 - 1)))
+      val delivered = scala.collection.mutable.ArrayBuffer.empty[EventRow]
+      def poll(limit: Int): Int = {
+        val got = vs.streamEvents("v", limit)
+        vs.ackBatch("v", got.map(e => (e.decider_id, e.offset)))
+        delivered ++= got
+        got.size
+      }
+      def headOf(id: String): Option[String] = w.getEvents(id, "Order").collect().lastOption.map(_.event_id)
+      var n = 0
+      def fresh(): String = { n += 1; s"s$seed-$n" }
+      (1 to 40).foreach { step =>
+        val id = if (rng.nextInt(6) == 0) s"new-${rng.nextInt(3)}" else streams(rng.nextInt(streams.size))
+        rng.nextInt(6) match {
+          case 0 => headOf(id)
+          case 1 | 2 =>
+            val e = fresh()
+            assert(w.appendEvent(ev(e, id, headOf(id))).isRight, s"seed $seed step $step")
+          case 3 => poll(1 + rng.nextInt(4))
+          case 4 =>
+            // a bulk commit replaces the base, folding the tail into it
+            val prev = headOf(id)
+            val (e1, e2) = (fresh(), fresh())
+            val src = Seq(("Placed", e1, 1L, "Order", id, "{}", None: Option[String], prev, false, new Timestamp(t0)),
+              ("Placed", e2, 1L, "Order", id, "{}", None: Option[String], Some(e1), false, new Timestamp(t0 + 1)))
+              .toDF("event", "event_id", "event_version", "decider", "decider_id",
+                "data", "command_id", "previous_id", "is_final", "created_at")
+            assert(BulkIngest.ingest(w, src).accepted === 2L, s"seed $seed step $step")
+          case _ => if (rng.nextBoolean()) w.saveIncrement(dir) else w.compact(dir)
+        }
+      }
+      while (poll(16) > 0) ()
+      val expected = w.allEvents.collect().groupBy(_.decider_id).map { case (k, es) => k -> es.sortBy(_.offset).map(_.event_id).toSeq }
+      val got = delivered.groupBy(_.decider_id).map { case (k, es) => k -> es.map(_.event_id).toSeq }
+      assert(got === expected, s"seed $seed")
+    }
   }
 
   test("a log held only in the tail reads and polls with no job") {

@@ -66,11 +66,12 @@ class ValidationPathsSpec extends SparkSpec with graft.testkit.TestKitReported {
   }
 
   test("sketch fast path (fresh store) agrees with the pure job path (loaded store) append for append") {
-    // `fast` keeps its complete membership sketches (zero-job path
-    // live); `slow` is save/load-cycled so sketchComplete drops and
-    // every append runs the job path. Identical inputs must produce
-    // identical accept/reject sequences — the differential proof that
-    // the sketches only ever answer what they know exactly.
+    // `fast` keeps the membership sketches it grew commit by commit;
+    // `slow` is save/load-cycled, so its sketches are the ones `load`
+    // builds from the log. Identical inputs must produce identical
+    // accept/reject sequences, and each batch's flags must equal the
+    // distributed pipeline's, which uses no sketch: the differential
+    // proof that the sketches only ever answer what they know exactly.
     val rnd = new scala.util.Random(99)
     val fast = freshStore()
     val slow = freshStore()
@@ -81,12 +82,18 @@ class ValidationPathsSpec extends SparkSpec with graft.testkit.TestKitReported {
     assert(fast.append(seed).rejected.isEmpty)
     assert(slow.append(seed).rejected.isEmpty)
     val dir = java.nio.file.Files.createTempDirectory("graft-fastpath").toString
-    slow.save(dir); slow.load(dir) // drops the sketches → job path only
+    slow.save(dir); slow.load(dir) // rebuilds the sketches from the log
     (0 until 5).foreach { round =>
       val batch = randomBatch(rnd, 10 + rnd.nextInt(15), Seq("c0", "c1", "c2"))
         .map(e => e.copy(event_id = s"r$round-${e.event_id}",
           previous_id = e.previous_id.map(p =>
             if (p.startsWith("b")) s"r$round-$p" else p)))
+      def flags(validate: Seq[EventInput] => Seq[(EventInput, Long, String)]) =
+        validate(batch).sortBy(_._2).map { case (e, idx, err) => (e.event_id, idx, err) }
+      // the sketch-free oracle
+      val oracle = flags(slow.distributedValidate)
+      assert(flags(fast.smallBatchValidate) === oracle, s"round $round: fresh store vs distributed")
+      assert(flags(slow.smallBatchValidate) === oracle, s"round $round: loaded store vs distributed")
       val ra = fast.append(batch)
       val rb = slow.append(batch)
       assert(ra.accepted.map(_.event_id) === rb.accepted.map(_.event_id),
