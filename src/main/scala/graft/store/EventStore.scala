@@ -28,19 +28,18 @@ import org.apache.spark.util.sketch.BloomFilter
   *    (schema.sql:32,44) become ONE per-stream sequential replay
   *    ([[EventStore.replayStream]]) that checks the batch's rows in
   *    input order per stream, over facts looked up in the committed
-  *    log: for a batch of up to [[EventStore.SmallBatchMax]] rows, the
-  *    driver's membership sketches or one per-task probe fold; above
-  *    it, broadcast semi-/anti-joins plus ONE `flatMapGroups` over
-  *    `(decider, decider_id)`. Either way: distributed across streams,
-  *    sequential within a stream, which is exactly the guarantee the
-  *    reference documents (ordering per partition, parallelism across
-  *    partitions).
+  *    log ([[validate]]): from the driver's membership sketches and
+  *    exact stream states when they answer exactly, else from one
+  *    per-task probe fold over the log. Either way the replay is
+  *    sequential within a stream and independent across streams, which
+  *    is exactly the guarantee the reference documents (ordering per
+  *    partition, parallelism across partitions).
   *  - The global BIGSERIAL offset is a per-commit sequence continued
   *    from the committed head (SURVEY §7.4.1): client append batches
-  *    are driver-bounded, so assignment happens with the (already
-  *    driver-resident) validated batch; the bulk-ingest path for
-  *    unbounded input uses `GlobalIndex.withOrderedIndex`
-  *    (range-partitioned parallel sort + partition prefix sums).
+  *    are driver-resident `Seq`s, so assignment happens with the
+  *    validated batch; the bulk-ingest path for unbounded input uses
+  *    `GlobalIndex.withOrderedIndex` (range-partitioned parallel sort +
+  *    partition prefix sums).
   *
   * Commit model: the log is `base ∪ tail`.
   *  - The BASE is an in-memory checkpoint, hash-partitioned by stream:
@@ -69,18 +68,17 @@ import org.apache.spark.util.sketch.BloomFilter
   * for the rows past that bound, so delivering an event appended
   * since the base to a stream read or appended before runs no job.
   * Validating a single append is driver work over Bloom sketches of
-  * the log (which [[load]] builds) and the stream's exact state (see
-  * the fast-path block): the OLTP command, read a stream and append
-  * on its head, runs one job of one task in all.
+  * the log (which every commit, [[load]] and [[commitBulk]] keep
+  * complete) and the stream's exact state (see the append validation
+  * block): the OLTP command, read a stream and append on its head,
+  * runs one job of one task in all.
   *
-  * Scale notes (100 TB): validation joins against the committed log are
-  * key-pruned — the batch's distinct `(decider, decider_id)` pairs are
-  * joined (broadcast, they are bounded by batch size) against the log
-  * first, so the per-stream state aggregation scans only the touched
-  * partitions' data, not the whole log. Nothing here collects event
-  * data to the driver beyond one stream's rows for a read; otherwise
-  * only per-partition counts and the rejected-row channel (bounded by
-  * batch size) leave the executors.
+  * Scale notes (100 TB): validation that the sketches cannot answer is
+  * one scan of the log with no exchange, whose tasks decode only the
+  * rows of the batch's streams, ids and previous ids and return facts
+  * bounded by the batch. Nothing here collects event data to the driver
+  * beyond one stream's rows for a read; otherwise only per-partition
+  * counts, sketches and those facts leave the executors.
   */
 final class EventStore(val spark: SparkSession) {
   import spark.implicits._
@@ -147,8 +145,8 @@ final class EventStore(val spark: SparkSession) {
     * and sees its previous_id already claimed (DuplicatePreviousId).
     * Readers are lock-free — `log` is a @volatile immutable
     * snapshot. Append throughput is unaffected at scale: parallelism
-    * lives INSIDE the batch (validation joins and replay distribute
-    * across Spark tasks), not across concurrent driver calls, and the
+    * lives INSIDE the batch (the validation probe runs across Spark
+    * tasks), not across concurrent driver calls, and the
     * unbounded-input path (BulkIngest) is one serialized commit per
     * already-validated bulk.
     */
@@ -202,9 +200,7 @@ final class EventStore(val spark: SparkSession) {
     val ts = now()
     val txn = nextTxn
 
-    val collected =
-      (if (batch.size <= EventStore.SmallBatchMax) smallBatchValidate(batch)
-       else distributedValidate(batch)).sortBy(_._2)
+    val collected = validate(batch).sortBy(_._2)
     val rejected: Seq[AppendError] = collected.collect {
       case (e, _, code) if code.nonEmpty => code match {
         case "final"              => AppendError.StreamFinalized(e.event_id)
@@ -229,13 +225,7 @@ final class EventStore(val spark: SparkSession) {
 
     // (5) Atomic commit: the rows join the tail and become visible as
     // one new `log` snapshot (≙ one Delta commit / one micro-batch).
-    if (accepted.nonEmpty) {
-      commitToTail(accepted)
-      headOffset = accepted.last.offset
-      nextTxn += 1
-      noteCommitted(accepted)
-      onCommit(accepted)
-    }
+    commitReplicated(accepted)
     AppendResult(accepted, rejected)
   }
 
@@ -358,176 +348,132 @@ final class EventStore(val spark: SparkSession) {
     foldStreamsOf(log, after)(f)
 
   // ------------------------------------------------------------------
-  // OLTP fast path: membership sketches + exact stream states.
+  // Append validation: membership sketches + exact stream states.
   //
   // The reference wins the sequential single-append shape outright
   // (µs B-tree probes vs ~100 ms of Spark job overhead per validation
   // lookup). The fix is driver state that answers the validation
   // questions withOUT a job — but ONLY when it can answer them
-  // EXACTLY; anything uncertain falls back to a job, so the semantics
-  // cannot diverge:
+  // EXACTLY; anything uncertain falls back to the probe job, so the
+  // semantics cannot diverge:
   //
   //  - `sketch`: Bloom filters over ALL committed event_ids, claimed
-  //    previous_ids, and stream keys. While `sketchComplete` holds
-  //    (fresh store; after `load`, which builds them in the job that
-  //    finds the heads; after [[enableFastAppend]]) a MISS is
-  //    definitive — the id/prev/stream is certainly absent — and that
-  //    is the only answer the fast path trusts; an id or prev hit
-  //    (present OR false positive) routes to the whole-log probe job.
-  //  - `hotStreams`: exact (finalized, n > 0, head event id) per stream
+  //    previous_ids, and stream keys. Every commit keeps them complete:
+  //    an append or a replicated commit adds its rows on the driver,
+  //    and [[load]] and [[commitBulk]] sketch their rows in a job that
+  //    reads them anyway. A MISS is therefore definitive — the
+  //    id/prev/stream is certainly absent — and that is the only answer
+  //    the driver path trusts; an id or prev hit (present OR false
+  //    positive) routes to the probe job.
+  //  - `hotStreams`: exact [[EventStore.StreamState]] per stream
   //    — maintained under commitLock at commit, so the chained-append
   //    shape (prev = current head) resolves prev-existence exactly.
   //    A stream that is not hot takes its state from the last
   //    [[getEvents]] while the log it read is still the live one, or
   //    else from one [[foldStreams]] task on its own partition. Bounded
   //    LRU; eviction only costs that task.
-  //
-  // commitBulk sets sketchComplete = false (rows not seen by the
-  // driver); enableFastAppend re-seeds. Shared-log replicas fold small
-  // rival commits through commitReplicated, which keeps the sketches;
-  // a big one goes through commitBulk and disables the fast path —
-  // conservative, never wrong.
 
-  private var sketch = new EventStore.LogSketch(EventStore.SketchItems, 0.01)
-  private var sketchComplete = true
-  private final case class HotStream(finalized: Boolean, n: Long, headId: Option[String])
-  private object HotStream {
-    /** The state of one stream from all its committed rows. */
-    def of(rows: Seq[EventRow]): HotStream =
-      HotStream(rows.exists(_.is_final), rows.size.toLong, rows.maxByOption(_.offset).map(_.event_id))
-  }
+  private var sketch = new EventStore.LogSketch
   private val hotStreams =
-    scala.collection.mutable.LinkedHashMap.empty[(String, String), HotStream]
+    scala.collection.mutable.LinkedHashMap.empty[(String, String), EventStore.StreamState]
   private val HotStreamCap = 65536
 
   /** The state [[getEvents]] last read, with the snapshot it read (held
     * weakly, so a stale read keeps no base alive).
     */
   private final class StreamRead(val at: java.lang.ref.WeakReference[Log],
-                                 val key: (String, String), val state: HotStream)
+                                 val key: (String, String), val state: EventStore.StreamState)
   @volatile private var lastRead: Option[StreamRead] = None
 
-  /** Sketch `base` in one job: each partition sketches its
-    * rows ([[EventStore.LogSketch]]), and the driver merges each
-    * partition's sketch as it arrives.
+  /** Sketch `rows` (with [[EventRow]]'s columns) in one job: each
+    * partition ships its share ([[EventStore.LogSketch.partial]]: its
+    * rows' sketched columns while they ship smaller than a sketch, else
+    * its sketch of about 3.8 MB), and the driver adds it as it arrives.
     */
-  private def sketchBase(base: Dataset[EventRow], items: Long, fpp: Double): EventStore.LogSketch = {
-    val merged = new EventStore.LogSketch(items, fpp)
-    spark.sparkContext.runJob(base.queryExecution.toRdd,
-      (it: Iterator[InternalRow]) => { val s = new EventStore.LogSketch(items, fpp); it.foreach(s.add); s },
-      (_: Int, s: EventStore.LogSketch) => merged.merge(s))
+  private def sketchBase(rows: DataFrame): EventStore.LogSketch = {
+    val merged = new EventStore.LogSketch
+    spark.sparkContext.runJob(rows.select(EventStore.SketchCols.map(col): _*).queryExecution.toRdd,
+      EventStore.LogSketch.partial _,
+      (_: Int, p: Either[Vector[InternalRow], EventStore.LogSketch]) => p.fold(_.foreach(merged.add), merged.merge))
     merged
   }
 
-  /** Re-seed the membership sketches from the committed log (one job
-    * over the base, the tail on the driver) and re-arm the zero-job
-    * append fast path after a bulk ingest. Sketch memory is ~1.2 MB
-    * per 10⁶ ids at 1% fpp — size `fpp` down (or skip enabling) if
-    * driver memory is tighter than append latency.
-    */
-  def enableFastAppend(fpp: Double = 0.01): Unit = commitLock.synchronized {
-    val l = log
-    sketch = sketchBase(l.base, math.max(1024L, headOffset * 2), fpp)
-    l.tail.foreach(sketch.add)
-    hotStreams.clear()
-    sketchComplete = true
-  }
-
-  /** Record an accepted commit in the fast-path state (caller holds
-    * commitLock).
+  /** Record an accepted commit in the driver's validation state (caller
+    * holds commitLock).
     */
   private def noteCommitted(accepted: Seq[EventRow]): Unit = {
     accepted.foreach(sketch.add)
     accepted.groupBy(e => (e.decider, e.decider_id)).foreach { case (k, es) =>
       val prior = hotStreams.remove(k) // re-insert = LRU touch
-      val fin = prior.exists(_.finalized) || es.exists(_.is_final)
-      val n = prior.map(_.n).getOrElse(0L) + es.size
-      remember(k, HotStream(fin, n, Some(es.last.event_id)))
+      remember(k, es.foldLeft(prior.getOrElse(EventStore.StreamState.Empty))(_ + _))
     }
   }
 
-  private def remember(k: (String, String), h: HotStream): Unit = {
+  private def remember(k: (String, String), h: EventStore.StreamState): Unit = {
     hotStreams(k) = h
     while (hotStreams.size > HotStreamCap) hotStreams.remove(hotStreams.head._1)
   }
 
-  /** Make every stream of `keys` that the sketch may hold hot: from the
-    * last read when it read the live log, else from one [[foldStreams]]
-    * job over their partitions. Either state is exact for the live log,
-    * which cannot change under commitLock (caller holds it).
+  /** The exact state of every stream of `keys` that the sketch may hold,
+    * made hot: from [[hotStreams]], from the last read when it read the
+    * live log, else from one [[foldStreams]] job over their partitions
+    * whose tasks fold each stream's rows into its state
+    * ([[EventStore.probeFold]] with nothing to probe), so only the
+    * states leave the executors. Each state is exact for the live log,
+    * which cannot change under commitLock (caller holds it). Returned
+    * rather than read back from the LRU, which a batch of many streams
+    * could overflow.
     */
-  private def makeHot(keys: Seq[(String, String)]): Unit = {
-    val cold = keys.filter(k => !hotStreams.contains(k) &&
-      sketch.streams.mightContainString(EventStore.streamKey(k._1, k._2)))
+  private def makeHot(keys: Seq[(String, String)]): Map[(String, String), EventStore.StreamState] = {
+    val maybe = keys.filter(k => sketch.streams.mightContainString(EventStore.streamKey(k._1, k._2)))
+    val hot = maybe.flatMap(k => hotStreams.get(k).map(k -> _)).toMap
     val l = log
-    val read = lastRead.filter(r => (r.at.get eq l) && cold.contains(r.key))
-    read.foreach(r => remember(r.key, r.state))
-    val rest = cold.filterNot(k => read.exists(_.key == k)).toSet
-    if (rest.nonEmpty) {
-      val rows = foldStreamsOf(l, EventStore.wholeStreams(rest.map(_._2)))(
-        _.filter(e => rest((e.decider, e.decider_id))).toVector).flatten
-      val byStream = rows.groupBy(e => (e.decider, e.decider_id))
-      rest.foreach(k => remember(k, HotStream.of(byStream.getOrElse(k, Nil))))
-    }
+    val read = lastRead.filter(r => (r.at.get eq l) && !hot.contains(r.key) && maybe.contains(r.key))
+      .map(r => r.key -> r.state).toMap
+    val rest = maybe.filterNot(k => hot.contains(k) || read.contains(k)).toSet
+    // with no stream left to fetch, the fold runs no job
+    val fold = EventStore.probeFold(rest, Set.empty, Set.empty)
+    val states = foldStreamsOf(l, EventStore.wholeStreams(rest.map(_._2)))(it => fold(it)._1)
+      .flatten.groupMapReduce(_._1)(_._2)(_ merge _)
+    val fetched = rest.map(k => k -> states.getOrElse(k, EventStore.StreamState.Empty)).toMap
+    (read ++ fetched).foreach { case (k, h) => remember(k, h) }
+    hot ++ read ++ fetched
   }
 
-  /** Validation with no job, or at most one task per stream partition:
-    * Some(flags) when EVERY row of the batch is exactly answerable from
-    * the sketches + exact stream states, None otherwise (caller runs
-    * the whole-log probe). Accept decisions only ever ride on definitive
-    * answers: sketch MISSES and exact stream states.
+  /** The batch's [[EventStore.LogFacts]] from driver state alone, or
+    * None when it cannot answer exactly. It answers when the sketches
+    * miss every batch id and previous id, and every previous id the id
+    * sketch may hold is the head of its row's stream; stream states
+    * come from [[makeHot]]: no job, or one task per cold stream
+    * partition.
     */
-  private def fastValidate(batch: Seq[EventInput]): Option[Seq[(EventInput, Long, String)]] = {
-    if (!sketchComplete) return None
+  private def driverFacts(batch: Seq[EventInput]): Option[EventStore.LogFacts] = {
     // maybe a duplicate id, or maybe a claimed previous id
     if (batch.exists(e => sketch.ids.mightContainString(e.event_id) ||
           e.previous_id.exists(sketch.prevs.mightContainString))) return None
-    makeHot(batch.map(e => (e.decider, e.decider_id)).distinct)
-    val flagged = batch.zipWithIndex.map { case (e, idx) =>
-      // a stream the sketch misses is certainly absent: (false, 0)
-      val hot = hotStreams.get((e.decider, e.decider_id))
-      val (fin, n) = hot.map(h => (h.finalized, h.n)).getOrElse((false, 0L))
-      val prevInStream = e.previous_id.exists { p =>
-        if (!sketch.ids.mightContainString(p)) false // definitely absent; intra-batch handled by replay
-        else if (hot.exists(_.headId.contains(p))) true // exact: the stream's head
-        else return None // committed somewhere, membership unknown
-      }
-      val rank = batch.take(idx).count(_.event_id == e.event_id) + 1
-      EventStore.Flagged(e, idx.toLong,
-        decidersMap.contains((e.decider, e.event, e.event_version)),
-        prev_in_stream = prevInStream, dup_event_id = false,
-        dup_prev_id = false, finalized = fin, n_committed = n, eid_rank = rank)
-    }
-    Some(flagged.groupBy(f => (f.in.decider, f.in.decider_id))
-      .values.toSeq.flatMap(EventStore.replayStream))
+    val streams = batch.map(e => (e.decider, e.decider_id)).distinct
+    val hot = makeHot(streams)
+    // a previous id the id sketch misses is certainly not committed
+    // (the replay resolves it within the batch); one it may hold is
+    // known only as the head of its row's stream
+    val committedPrevs = batch.flatMap(e =>
+      e.previous_id.filter(sketch.ids.mightContainString).map(p => (p, e.decider, e.decider_id)))
+    if (!committedPrevs.forall { case (p, d, id) => hot.get((d, id)).exists(_.headId.contains(p)) }) None
+    else Some(EventStore.LogFacts(hot, Set.empty, Set.empty, committedPrevs.toSet))
   }
 
-  /** Driver-side fast path for bounded batches (≤ SmallBatchMax): when
-    * the sketches and the exact stream states can answer, validation is
-    * pure driver work ([[fastValidate]], zero jobs — the OLTP
-    * chained-append shape — or one task per cold stream); otherwise the
-    * committed-log facts come from ONE job, one scan and no exchange: a
-    * per-task fold over the whole base (the [[ViewStreams.streamEvents]]
-    * stage 3+4 pattern), decoding only the rows of the batch's streams,
-    * ids and previous ids, returns per task one state row per batch
-    * stream and the id/prev hits; the tail folds on the driver and the
-    * driver merges them. The replay itself is
-    * [[EventStore.replayStream]], the same code the distributed path
-    * executes, so the semantics cannot diverge.
+  /** The batch's [[EventStore.LogFacts]] from ONE job, one scan and no
+    * exchange: a per-task fold over the whole base
+    * ([[EventStore.probeFold]], the [[ViewStreams.streamEvents]] stage
+    * 3+4 pattern) decodes only the rows of the batch's streams, ids and
+    * previous ids, and returns per task one state row per batch stream
+    * and the id/prev hits, both bounded by the batch; the tail folds on
+    * the driver, and the driver merges them.
     */
-  private[store] def smallBatchValidate(batch: Seq[EventInput]): Seq[(EventInput, Long, String)] = {
-    fastValidate(batch) match {
-      case Some(r) => return r
-      case None => ()
-    }
-    val inputs = batch.zipWithIndex.map { case (e, i) =>
-      (e, i.toLong, decidersMap.contains((e.decider, e.event, e.event_version)))
-    }
-    val batchIds = inputs.map(_._1.event_id).distinct
-    val batchPrevs = inputs.flatMap(_._1.previous_id).distinct
-    val streams = inputs.map(t => (t._1.decider, t._1.decider_id)).toSet
-    val probed = (batchIds ++ batchPrevs).toSet
-    val prevs = batchPrevs.toSet
+  private def probeFacts(batch: Seq[EventInput]): EventStore.LogFacts = {
+    val streams = batch.map(e => (e.decider, e.decider_id)).toSet
+    val prevs = batch.flatMap(_.previous_id).toSet
+    val probed = batch.map(_.event_id).toSet ++ prevs
     val fold = EventStore.probeFold(streams, probed, prevs)
     val l = log
     val streamIds = streams.map(_._2)
@@ -539,152 +485,69 @@ final class EventStore(val spark: SparkSession) {
           (!r.isNullAt(EventStore.PreviousIdCol) &&
             prevs(r.getUTF8String(EventStore.PreviousIdCol).toString)))(fold)
     val partials = fromBase :+ fold(l.tail.iterator)
-    // per-stream committed state (exists / finalized)
-    val state: Map[(String, String), (Boolean, Long)] = partials.toSeq.flatMap(_._1)
-      .groupMapReduce(_._1)(_._2) { case ((f1, n1), (f2, n2)) => (f1 || f2, n1 + n2) }
-    // committed id/prev membership: event_id ∈ batchPrevs feeds the
-    // prev-existence check; event_id ∈ batchIds and previous_id ∈
-    // batchPrevs feed the two dup checks
-    val hits = partials.toSeq.flatMap(_._2)
-    val idsSet = batchIds.toSet
-    val prevsSet = batchPrevs.toSet
-    val committedIds = hits.map(_.event_id).filter(idsSet).toSet
-    val committedPrevs = hits.flatMap(_.previous_id).filter(prevsSet).toSet
-    // prev_in_stream: the claimed previous event exists in the SAME stream
-    val inStream: Set[(String, String, String)] =
-      hits.map(h => (h.event_id, h.decider, h.decider_id)).toSet
+    // every committed row holding a batch id, or claiming a batch
+    // previous id, is a hit
+    val hits = partials.flatMap(_._2)
+    EventStore.LogFacts(
+      partials.flatMap(_._1).groupMapReduce(_._1)(_._2)(_ merge _),
+      hits.map(_.event_id).toSet, hits.flatMap(_.previous_id).toSet,
+      hits.map(h => (h.event_id, h.decider, h.decider_id)).toSet)
+  }
+
+  /** Validate `batch` against the committed log and itself, for any
+    * batch size: the log facts come from driver state when it answers
+    * exactly ([[driverFacts]]: no job for the OLTP chained append, or
+    * one task per cold stream partition), else from the probe job
+    * ([[probeFacts]]); one pass flags each row, and
+    * [[EventStore.replayStream]] checks each stream's rows in input
+    * order. Returns (input, input index, error code; "" = accepted).
+    * [[append]] calls it under commitLock.
+    */
+  private[store] def validate(batch: Seq[EventInput]): Seq[(EventInput, Long, String)] = {
+    val facts = driverFacts(batch).getOrElse(probeFacts(batch))
     // intra-batch duplicate event_id rank (input order)
     val eidRank = scala.collection.mutable.Map.empty[String, Int]
-    val flagged = inputs.map { case (e, idx, registered) =>
+    val flagged = batch.zipWithIndex.map { case (e, idx) =>
       val rank = eidRank.updateWith(e.event_id)(c => Some(c.getOrElse(0) + 1)).get
-      val (fin, n) = state.getOrElse((e.decider, e.decider_id), (false, 0L))
-      EventStore.Flagged(e, idx, registered,
-        prev_in_stream = e.previous_id.exists(p => inStream((p, e.decider, e.decider_id))),
-        dup_event_id = committedIds(e.event_id),
-        dup_prev_id = e.previous_id.exists(committedPrevs),
-        finalized = fin, n_committed = n, eid_rank = rank)
+      val st = facts.state.getOrElse((e.decider, e.decider_id), EventStore.StreamState.Empty)
+      EventStore.Flagged(e, idx.toLong, decidersMap.contains((e.decider, e.event, e.event_version)),
+        prev_in_stream = e.previous_id.exists(p => facts.inStream((p, e.decider, e.decider_id))),
+        dup_event_id = facts.ids(e.event_id),
+        dup_prev_id = e.previous_id.exists(facts.prevs),
+        finalized = st.finalized, n_committed = st.n, eid_rank = rank)
     }
     flagged.groupBy(f => (f.in.decider, f.in.decider_id))
       .values.toSeq.flatMap(EventStore.replayStream)
   }
 
-  /** Distributed validation pipeline for large batches (the scale
-    * path): set-level joins against the key-pruned log, a window for
-    * intra-batch duplicate ranking, and per-stream replay inside
-    * flatMapGroups.
-    */
-  private[store] def distributedValidate(batch: Seq[EventInput]): Seq[(EventInput, Long, String)] = {
-    val events = log.all
-    // (1) FK gate (J8): the registry is driver-resident (see header),
-    // so the composite-FK flag is stamped onto each row up front — the
-    // moral equivalent of the broadcast semi-join, without shipping a
-    // dimension table that already fits in a map.
-    val inputs = batch.zipWithIndex.map { case (e, i) =>
-      (e, i.toLong, decidersMap.contains((e.decider, e.event, e.event_version)))
-    }.toDS().toDF("in", "input_idx", "registered")
-
-    val fkChecked = inputs.select($"in", $"input_idx", $"registered")
-
-    // (2) Committed-log lookups, pruned to the streams the batch touches.
-    val touched = inputs.select($"in.decider".as("t_decider"),
-      $"in.decider_id".as("t_decider_id")).distinct()
-    val logSlice = events.toDF().join(broadcast(touched),
-      $"decider" === $"t_decider" && $"decider_id" === $"t_decider_id", "left_semi")
-
-    // Per-stream committed state: does the stream exist / is it final.
-    val streamState = logSlice
-      .groupBy($"decider", $"decider_id")
-      .agg(max(when($"is_final", 1).otherwise(0)).as("finalized"),
-           count(lit(1)).as("n_committed"))
-      .select($"decider".as("s_decider"), $"decider_id".as("s_decider_id"),
-              ($"finalized" === 1).as("finalized"), $"n_committed")
-
-    // previous_id resolution against the committed stream (J7): the
-    // claimed previous event must exist in the SAME (decider, decider_id).
-    val prevResolved = fkChecked
-      .join(logSlice.select($"event_id".as("p_event_id"),
-              $"decider".as("p_decider"), $"decider_id".as("p_decider_id"),
-              lit(true).as("prev_in_stream")),
-        $"in.previous_id" === $"p_event_id" &&
-          $"in.decider" === $"p_decider" && $"in.decider_id" === $"p_decider_id",
-        "left")
-      .select($"in", $"input_idx", $"registered",
-              coalesce($"prev_in_stream", lit(false)).as("prev_in_stream"))
-
-    // Global uniqueness vs the committed log (M9): event_id and
-    // previous_id are unique across ALL streams.
-    val committedIds = events.select($"event_id".as("c_event_id"), lit(true).as("dup_event_id"))
-    val committedPrevs = events.filter($"previous_id".isNotNull)
-      .select($"previous_id".as("c_prev_id"), lit(true).as("dup_prev_id"))
-    val uniqChecked = prevResolved
-      .join(committedIds, $"in.event_id" === $"c_event_id", "left")
-      .join(committedPrevs, $"in.previous_id" === $"c_prev_id", "left")
-      .select($"in", $"input_idx", $"registered", $"prev_in_stream",
-              coalesce($"dup_event_id", lit(false)).as("dup_event_id"),
-              coalesce($"dup_prev_id", lit(false)).as("dup_prev_id"))
-      .join(streamState,
-        $"in.decider" === $"s_decider" && $"in.decider_id" === $"s_decider_id", "left")
-      .select($"in", $"input_idx", $"registered", $"prev_in_stream",
-              $"dup_event_id", $"dup_prev_id",
-              coalesce($"finalized", lit(false)).as("finalized"),
-              coalesce($"n_committed", lit(0L)).as("n_committed"))
-
-    // Intra-batch duplicate event_id across streams: only the FIRST
-    // occurrence (input order) may survive; flag the rest.
-    val wDupe = org.apache.spark.sql.expressions.Window
-      .partitionBy($"in.event_id").orderBy($"input_idx")
-    val flagged = uniqChecked
-      .withColumn("eid_rank", row_number().over(wDupe))
-
-    // (3) Sequential replay per stream: trigger-order checks with
-    // intra-batch visibility (earlier accepted rows of the same stream
-    // count as existing; an accepted final event blocks later rows).
-    val typed = flagged.as[EventStore.Flagged]
-
-    // Error identities travel as string codes (a sealed ADT has no
-    // Spark Encoder); the driver maps codes back to typed AppendErrors.
-    val validated: Dataset[(EventInput, Long, String)] = typed
-      .groupByKey(f => (f.in.decider, f.in.decider_id))
-      .flatMapGroups { (_: (String, String), rows: Iterator[EventStore.Flagged]) =>
-        EventStore.replayStream(rows.toSeq).iterator
-      }
-
-    validated.collect().toSeq
-  }
-
   /** Hook for the streaming layer's lock fanout (M1). */
   @volatile var onCommit: Seq[EventRow] => Unit = _ => ()
 
-  /** Advance the transaction counter past `t` (SharedLog rebuild: a
-    * compacted base folds many commits into one [[commitBulk]] bump,
-    * so the counter must be re-seated from the data's max).
-    */
-  private[store] def ensureTxnPast(t: Long): Unit = commitLock.synchronized {
-    nextTxn = math.max(nextTxn, t + 1)
-  }
-
-  /** Bulk commit for the distributed ingest path (BulkIngest): rows
-    * arrive already validated and offset-assigned; the commit counts
-    * and appends them without a driver round-trip of the data. The
-    * lock fanout gets only the per-partition HEADS (control-plane
-    * cardinality), not the rows.
+  /** Bulk commit of rows that arrive already validated and
+    * offset-assigned and never pass through the driver: BulkIngest, a
+    * SharedLog base or large commit, a shared-delivery micro-batch. One
+    * job counts them; one sketches them, in one task per
+    * [[EventStore.IncrementRowsPerTask]] rows (so a small bulk ships
+    * only its rows' sketched columns), which keeps the membership sketches
+    * complete and gives the new head and the highest transaction id;
+    * one lands them in a new base; and one finds the per-stream HEADS
+    * for the lock fanout (control-plane cardinality), not the rows.
     */
   private[store] def commitBulk(rows: Dataset[EventRow]): Long = commitLock.synchronized {
-    // rows never pass through the driver: the membership sketches can
-    // no longer claim completeness (re-seed with enableFastAppend)
-    sketchComplete = false
+    // bulk rows may extend any stream: the hot states go stale
     hotStreams.clear()
     val staged = rows.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val n = staged.count()
     if (n > 0) {
+      val added = sketchBase(staged.toDF().coalesce(EventStore.tasksFor(n)))
+      sketch.merge(added)
+      headOffset = math.max(headOffset, added.head)
+      nextTxn = math.max(nextTxn + 1, added.txn + 1)
       // a bulk is not driver-resident: it folds the tail and lands in a
       // new checkpointed base, exchanged into the base's partitioning
       val l = log
-      headOffset = math.max(headOffset,
-        staged.agg(max($"offset")).collect().head.getLong(0))
-      val added = l.tail.toDS().union(staged).repartition(partitions, $"decider_id")
-      log = new Log(grownBase(l, added.rdd), headOffset, Vector.empty, l.flushed)
-      nextTxn += 1
+      val grown = l.tail.toDS().union(staged).repartition(partitions, $"decider_id")
+      log = new Log(grownBase(l, grown.rdd), headOffset, Vector.empty, l.flushed)
       val heads = staged.groupBy($"decider_id")
         .agg(max_by(struct($"offset", $"is_final"), $"offset").as("h"))
         .select($"decider_id", $"h.offset", $"h.is_final")
@@ -699,17 +562,18 @@ final class EventStore(val spark: SparkSession) {
     n
   }
 
-  /** Fold rows ALREADY validated and offset-assigned by another
-    * process's store (SharedLog resync, driver-bounded commits): like
-    * [[commitBulk]] but driver-resident, so the membership sketches
-    * stay complete and the append fast path survives shared mode.
-    * Rows must arrive in their committed order.
+  /** Fold rows ALREADY validated and offset-assigned, by [[append]] or
+    * by another process's store (a SharedLog commit of at most
+    * [[SharedLog.SmallBatchMax]] rows): like [[commitBulk]], but the
+    * rows are driver-resident, so they join the tail, the sketches and
+    * the hot stream states with no job. Rows must arrive in their
+    * committed order.
     */
   private[store] def commitReplicated(rows: Seq[EventRow]): Unit = commitLock.synchronized {
     if (rows.isEmpty) return
     commitToTail(rows)
     headOffset = math.max(headOffset, rows.map(_.offset).max)
-    nextTxn += 1
+    nextTxn = math.max(nextTxn + 1, rows.map(_.transaction_id).max + 1)
     noteCommitted(rows)
     onCommit(rows)
   }
@@ -722,13 +586,14 @@ final class EventStore(val spark: SparkSession) {
     * its tail rows, sorted on the driver — a stream is small. The result
     * is driver-resident, so collecting it runs no further job. The read
     * also leaves the stream's exact state for validation: an append to
-    * it before the log changes runs no job ([[fastValidate]]).
+    * it before the log changes runs no job ([[validate]]).
     */
   def getEvents(deciderId: String, decider: String): Dataset[EventRow] = {
     val l = log
     val rows = foldStreamsOf(l, EventStore.wholeStreams(Seq(deciderId)))(_.filter(_.decider == decider).toVector)
       .flatten.sortBy(_.offset)
-    lastRead = Some(new StreamRead(new java.lang.ref.WeakReference(l), (decider, deciderId), HotStream.of(rows)))
+    lastRead = Some(new StreamRead(new java.lang.ref.WeakReference(l), (decider, deciderId),
+      rows.foldLeft(EventStore.StreamState.Empty)(_ + _)))
     rows.toDS()
   }
 
@@ -921,15 +786,11 @@ final class EventStore(val spark: SparkSession) {
       // size the write to the unflushed rows, not the lineage: their
       // plan may inherit partitions from the base, and each non-empty task
       // writes a file per (bucket, day) it holds — guide §6 output
-      // sizing. n is known; one task per `incrementRowsPerTask` rows
-      // (conf `spark.graft.store.incrementRowsPerTask`) keeps flush
-      // files at target size at ANY tail size, and coalesce never
-      // increases partitions, so a huge tail keeps its parallelism.
-      val rowsPerTask = spark.conf
-        .getOption("spark.graft.store.incrementRowsPerTask")
-        .map(_.toLong).getOrElse(262144L)
-      val tasks = math.max(1L, (n + rowsPerTask - 1) / rowsPerTask).toInt
-      withLayoutCols(pending.get, diskLayout.get._2).coalesce(tasks)
+      // sizing. n is known; one task per
+      // [[EventStore.IncrementRowsPerTask]] rows keeps flush files at
+      // target size at ANY tail size, and coalesce never increases
+      // partitions, so a huge tail keeps its parallelism.
+      withLayoutCols(pending.get, diskLayout.get._2).coalesce(EventStore.tasksFor(n))
         .write.partitionBy("bucket", "day").mode("append").parquet(eventsPath(dir))
       // the registry rewrite is skipped when THIS writer already wrote
       // this exact registry version to this dir (registrations are
@@ -977,13 +838,14 @@ final class EventStore(val spark: SparkSession) {
   }
 
   /** Load the log at `dir` and checkpoint it as the base, partitioned by
-    * stream, in one job; a second job over the checkpoint finds the
-    * heads and builds the membership sketches, so appends after a
-    * restart keep the zero-job fast path. The sketches have the size a
-    * fresh store's have ([[EventStore.SketchItems]]): past that many
-    * rows they saturate, which only sends appends to the probe job. Its
-    * bucket count is the one recorded with the version; `buckets` only
-    * serves logs written without that record.
+    * stream, in one job; a second job over the checkpoint sketches it
+    * (the committed head, the highest transaction id and the membership
+    * sketches), so appends after a restart validate on the driver as
+    * they do on a fresh store. Every sketch is sized for
+    * [[EventStore.SketchItems]] items: past that many rows they
+    * saturate, which only sends appends to the probe job. Its bucket
+    * count is the one recorded with the version; `buckets` only serves
+    * logs written without that record.
     */
   def load(dir: String, buckets: Int = 32): Unit = commitLock.synchronized {
     hotStreams.clear()
@@ -1001,8 +863,7 @@ final class EventStore(val spark: SparkSession) {
         decidersMap((d.decider, d.event, d.event_version)) = d)
     // in-memory registry now equals the on-disk copy of THIS dir
     decidersSavedAt = Some((dir, decidersVersion))
-    sketch = sketchBase(base, EventStore.SketchItems, 0.01)
-    sketchComplete = true
+    sketch = sketchBase(base.toDF())
     headOffset = sketch.head
     nextTxn = sketch.txn + 1
     log = new Log(base, headOffset, Vector.empty, headOffset)
@@ -1060,23 +921,14 @@ object EventStore {
                                     retainDepth: Int = 1): Unit =
     VersionedDir.EventLog.publish(dir, newVer, conf, retainDepth)
 
-  /** Row shape after the join-based validation stages, consumed by the
-    * per-stream sequential replay. Top-level so Spark can derive an
-    * Encoder (local case classes cannot get TypeTags).
+  /** A batch row with the committed-log facts [[EventStore.validate]]
+    * flagged it with, consumed by the per-stream sequential replay.
+    * A top-level case class, so Spark can derive an Encoder for it.
     */
   final case class Flagged(in: EventInput, input_idx: Long, registered: Boolean,
                            prev_in_stream: Boolean, dup_event_id: Boolean,
                            dup_prev_id: Boolean, finalized: Boolean,
                            n_committed: Long, eid_rank: Int)
-
-  /** Batches at or below this size validate through the driver-side
-    * fast path (the membership sketches, or one probe-fold job, then
-    * [[replayStream]] locally); larger batches run the distributed
-    * join/window pipeline. The
-    * semantics are identical — replayStream IS the shared replay — the
-    * fast path only changes where the (bounded) flag computation runs.
-    */
-  val SmallBatchMax = 64
 
   /** Tail rows at which a commit folds the tail into a freshly
     * checkpointed base: bounds the driver-held rows and the
@@ -1085,44 +937,63 @@ object EventStore {
     */
   private[store] val TailMaxRows = 1024
 
-  /** Items each membership sketch is sized for: a fresh store's, and
-    * the cap of the sketches `load` builds.
+  /** Items every membership sketch is sized for, at 1% fpp: a fresh
+    * store's, and the ones `load` and a bulk commit build, so any two
+    * merge.
     */
   private[store] val SketchItems: Long = 1L << 20
 
+  /** The columns a [[LogSketch]] reads, in the order it reads them. */
+  private val SketchCols = Seq("offset", "transaction_id", "event_id", "previous_id", "decider", "decider_id")
+
+  /** Rows up to which a partition ships its [[SketchCols]] rather than
+    * a sketch: well under a sketch's size, and under Spark's 1 MiB
+    * direct task result.
+    */
+  private val InlineSketchRows = 4096
+
+  /** Rows per task of a job sized to a row count it already knows: a
+    * [[EventStore.saveIncrement]] write and a [[EventStore.commitBulk]]
+    * sketch.
+    */
+  private[store] val IncrementRowsPerTask = 262144L
+
+  /** Tasks for `n` rows at [[IncrementRowsPerTask]] rows each, at least one. */
+  private def tasksFor(n: Long): Int =
+    math.max(1L, (n + IncrementRowsPerTask - 1) / IncrementRowsPerTask).toInt
+
   private val RowSchema = Encoders.product[EventRow].schema
   /** Ordinals of the columns a base row is tested on before decoding. */
-  private[store] val DeciderCol = RowSchema.fieldIndex("decider")
   private[store] val DeciderIdCol = RowSchema.fieldIndex("decider_id")
   private[store] val EventIdCol = RowSchema.fieldIndex("event_id")
   private[store] val PreviousIdCol = RowSchema.fieldIndex("previous_id")
   private val OffsetCol = RowSchema.fieldIndex("offset")
-  private val TxnCol = RowSchema.fieldIndex("transaction_id")
 
   private[store] def streamKey(decider: String, deciderId: String): String = s"$decider|$deciderId"
 
   /** [[EventStore.foldStreams]]'s bounds for every row of the streams `ids`. */
   private[store] def wholeStreams(ids: Iterable[String]): Map[String, Long] = ids.map(_ -> Long.MinValue).toMap
 
-  /** What the append fast path knows of a set of committed rows: their
+  /** What append validation knows of a set of committed rows: their
     * highest offset and transaction id, and Bloom filters over their
-    * event ids, claimed previous ids and stream keys, sized for `items`
-    * at `fpp`. Built per partition on the executors and merged on the
-    * driver, or grown row by row at commit.
+    * event ids, claimed previous ids and stream keys, sized for
+    * [[SketchItems]] at 1% fpp. Built per partition on the executors
+    * and merged on the driver, or grown row by row at commit.
     */
-  private[store] final class LogSketch(items: Long, fpp: Double) extends Serializable {
+  private[store] final class LogSketch extends Serializable {
     var head = 0L
     var txn = 0L
-    val ids: BloomFilter = BloomFilter.create(items, fpp)
-    val prevs: BloomFilter = BloomFilter.create(items, fpp)
-    val streams: BloomFilter = BloomFilter.create(items, fpp)
+    val ids: BloomFilter = BloomFilter.create(SketchItems, 0.01)
+    val prevs: BloomFilter = BloomFilter.create(SketchItems, 0.01)
+    val streams: BloomFilter = BloomFilter.create(SketchItems, 0.01)
 
+    /** Adds a row of [[SketchCols]]. */
     def add(r: InternalRow): Unit = {
-      head = math.max(head, r.getLong(OffsetCol))
-      txn = math.max(txn, r.getLong(TxnCol))
-      ids.putString(r.getUTF8String(EventIdCol).toString)
-      if (!r.isNullAt(PreviousIdCol)) prevs.putString(r.getUTF8String(PreviousIdCol).toString)
-      streams.putString(streamKey(r.getUTF8String(DeciderCol).toString, r.getUTF8String(DeciderIdCol).toString))
+      head = math.max(head, r.getLong(0))
+      txn = math.max(txn, r.getLong(1))
+      ids.putString(r.getUTF8String(2).toString)
+      if (!r.isNullAt(3)) prevs.putString(r.getUTF8String(3).toString)
+      streams.putString(streamKey(r.getUTF8String(4).toString, r.getUTF8String(5).toString))
     }
 
     def add(e: EventRow): Unit = {
@@ -1142,26 +1013,65 @@ object EventStore {
     }
   }
 
-  /** A committed row the small-batch validation probe matched. */
+  private[store] object LogSketch {
+    /** One partition's share of a sketch, built where its rows of
+      * [[SketchCols]] are: the rows themselves while there are at most
+      * [[InlineSketchRows]] (they ship smaller than a sketch), else
+      * their sketch.
+      */
+    def partial(it: Iterator[InternalRow]): Either[Vector[InternalRow], LogSketch] = {
+      val rows = Vector.newBuilder[InternalRow]
+      var n = 0
+      while (n <= InlineSketchRows && it.hasNext) { rows += it.next().copy(); n += 1 }
+      if (n <= InlineSketchRows) Left(rows.result())
+      else { val s = new LogSketch; rows.result().foreach(s.add); it.foreach(s.add); Right(s) }
+    }
+  }
+
+  /** What validation knows of one stream's committed rows: whether one
+    * is final, how many there are, and the offset and event id of the
+    * last (`0` and None: no row). States of disjoint row sets merge, so
+    * tasks fold them and the driver merges the results.
+    */
+  private[store] final case class StreamState(finalized: Boolean, n: Long, head: Long, headId: Option[String]) {
+    def +(e: EventRow): StreamState =
+      StreamState(finalized || e.is_final, n + 1,
+        math.max(head, e.offset), if (e.offset > head) Some(e.event_id) else headId)
+
+    def merge(o: StreamState): StreamState =
+      StreamState(finalized || o.finalized, n + o.n,
+        math.max(head, o.head), if (o.head > head) o.headId else headId)
+  }
+
+  private[store] object StreamState { val Empty: StreamState = StreamState(finalized = false, 0L, 0L, None) }
+
+  /** What validating a batch needs of the committed log: the state of
+    * each batch stream (absent: [[StreamState.Empty]]), and, among the
+    * batch's ids and previous ids, the committed event ids, the claimed
+    * previous ids and the committed `(event_id, decider, decider_id)`
+    * triples.
+    */
+  private final case class LogFacts(state: Map[(String, String), StreamState],
+                                    ids: Set[String], prevs: Set[String],
+                                    inStream: Set[(String, String, String)])
+
+  /** A committed row the validation probe matched. */
   private[store] final case class Hit(event_id: String, previous_id: Option[String],
                        decider: String, decider_id: String)
 
-  /** Per-task fold of the small-batch validation probe: the committed
-    * (finalized, count) state of each batch stream, and every row whose
+  /** Per-task fold of the validation probe: the committed
+    * [[StreamState]] of each stream of `streams`, and every row whose
     * event_id is probed or whose previous_id is a batch previous_id.
-    * Output is bounded by the batch: one state row per stream per task,
+    * Output is bounded by the batch: one state per stream per task,
     * and unique ids/prevs allow at most two hits per probed value.
     */
   private[store] def probeFold(streams: Set[(String, String)], ids: Set[String], prevs: Set[String])
-      : Iterator[EventRow] => (Map[(String, String), (Boolean, Long)], Vector[Hit]) = { it =>
-    val state = scala.collection.mutable.HashMap.empty[(String, String), (Boolean, Long)]
+      : Iterator[EventRow] => (Map[(String, String), StreamState], Vector[Hit]) = { it =>
+    val state = scala.collection.mutable.HashMap.empty[(String, String), StreamState]
     val hits = Vector.newBuilder[Hit]
     it.foreach { e =>
       val k = (e.decider, e.decider_id)
-      if (streams(k)) {
-        val (fin, n) = state.getOrElse(k, (false, 0L))
-        state(k) = (fin || e.is_final, n + 1)
-      }
+      if (streams(k)) state(k) = state.getOrElse(k, StreamState.Empty) + e
       if (ids(e.event_id) || e.previous_id.exists(prevs))
         hits += Hit(e.event_id, e.previous_id, e.decider, e.decider_id)
     }
@@ -1172,10 +1082,9 @@ object EventStore {
     * alphabetical firing order (t_check_final..., t_check_first...,
     * t_check_previous..., schema.sql:91-146), then constraints, with
     * intra-batch visibility (earlier accepted rows of the same stream
-    * count as existing; an accepted final blocks later rows). Pure —
-    * executed inside flatMapGroups on executors for large batches and
-    * directly on the driver for small ones (same code = same
-    * semantics).
+    * count as existing; an accepted final blocks later rows). Pure, so
+    * the same code replays on the driver in [[EventStore.validate]] and
+    * inside `flatMapGroups` on executors in a spec's set-level oracle.
     */
   def replayStream(rows: Seq[Flagged]): Seq[(EventInput, Long, String)] = {
     val sorted = rows.sortBy(_.input_idx)

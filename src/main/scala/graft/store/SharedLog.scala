@@ -35,12 +35,13 @@ import org.apache.spark.sql.{Dataset, SparkSession}
   *  - **Global offsets and txn ids without a coordinator**: each
   *    append resyncs first, so the local head equals the shared head
   *    when offsets are assigned; the txn counter advances once per
-  *    folded commit, so ids stay globally unique and monotone along
-  *    the commit sequence.
+  *    folded commit and never falls behind the ids the folded rows
+  *    carry, so ids stay globally unique and monotone along the commit
+  *    sequence.
   *
   * Scale notes (100 TB): the mutex guards driver-side control flow +
   * the batch's own validation/write jobs — parallelism lives INSIDE
-  * the batch (the store's validation joins distribute), which is the
+  * the batch (the store's validation probe distributes), which is the
   * single-process story and the reference's own model (one xact
   * commits a batch at a time; producers across processes serialize on
   * conflicting heads). Resync cost is proportional to NEW commits
@@ -255,11 +256,9 @@ final class SharedLog(val spark: SparkSession,
       ()
     case "events" =>
       val ds = spark.read.parquet(new Path(dir, m.file).toString).as[EventRow]
-      // driver-bounded commits fold through the driver so the local
-      // replica's membership sketches stay COMPLETE — the append fast
-      // path keeps working in shared mode; big bulk commits take the
-      // distributed fold (which conservatively drops the sketches)
-      if (m.count > 0 && m.count <= EventStore.SmallBatchMax)
+      // both folds keep the local replica's membership sketches
+      // complete; see SmallBatchMax for the choice
+      if (m.count > 0 && m.count <= SmallBatchMax)
         store.commitReplicated(ds.collect().toSeq.sortBy(_.offset))
       else { store.commitBulk(ds); () }
     case "compact" =>
@@ -296,12 +295,6 @@ final class SharedLog(val spark: SparkSession,
       readCommit(s).foreach(applyCommit)
       lastSeen = s
     }
-    // one commitBulk bump per FOLDED commit under-counts through a
-    // base: re-seat the txn counter from the data's own max
-    val maxTxn = store.allEvents.toDF()
-      .agg(org.apache.spark.sql.functions.max($"transaction_id")).collect()
-      .headOption.flatMap(r => Option(r.get(0)).map(_.asInstanceOf[Long])).getOrElse(0L)
-    store.ensureTxnPast(maxTxn)
   }
 
   /** Atomic create-exclusive publish — the hard fence. Failing it
@@ -341,6 +334,14 @@ final class SharedLog(val spark: SparkSession,
 
 object SharedLog {
   private val CommitName = """(\d{20})\.json""".r
+
+  /** An events commit of at most this many rows folds into the local
+    * replica through the driver ([[EventStore.commitReplicated]]: one
+    * read, no further job); a larger one through
+    * [[EventStore.commitBulk]], whose rows stay on the executors at the
+    * cost of a few whole-commit jobs.
+    */
+  private[store] val SmallBatchMax = 64
 
   /** One entry of the commit sequence. `kind`: "events" (a validated
     * batch in `file`, offsets [minOffset, maxOffset]), "register" (a

@@ -10,11 +10,13 @@ import org.apache.spark.sql.SparkSession
   * between [[CallProbe.start]] and [[CallProbe.stop]]: its jobs (tagged
   * with a job group), the partition index of every task those jobs run,
   * and the bytes read through Hadoop's `file:` filesystem (the counter
-  * a parquet scan of a local log feeds).
+  * a parquet scan of a local log feeds). [[resultBytes]] adds the bytes
+  * those tasks sent back to the driver as results.
   */
 final class CallProbe private (spark: SparkSession, private val group: String) extends SparkListener {
   private val jobStages = new ConcurrentLinkedQueue[Seq[Int]]()
-  private val taskEnds = new ConcurrentLinkedQueue[(Int, Int)]()
+  private val taskEnds = new ConcurrentLinkedQueue[(Int, Int, Long)]()
+  @volatile private var shipped = 0L
   @volatile private var markerSeen = false
   private val fileBytesBefore = CallProbe.fileBytesRead()
 
@@ -26,7 +28,7 @@ final class CallProbe private (spark: SparkSession, private val group: String) e
     }
 
   override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
-    taskEnds.add((e.stageId, e.taskInfo.partitionId))
+    taskEnds.add((e.stageId, e.taskInfo.partitionId, Option(e.taskMetrics).fold(0L)(_.resultSize)))
 
   /** Stop recording. A marker job run after the call is seen by the
     * listener only after every earlier event (the bus delivers in
@@ -43,9 +45,13 @@ final class CallProbe private (spark: SparkSession, private val group: String) e
     spark.sparkContext.removeSparkListener(this)
     assert(markerSeen, "listener bus did not deliver the marker job")
     val stages = jobStages.asScala.flatten.toSet
-    CallProbe.Cost(jobStages.size,
-      taskEnds.asScala.collect { case (s, p) if stages(s) => p }.toSeq.sorted, fileBytes)
+    val tasks = taskEnds.asScala.filter(t => stages(t._1)).toSeq
+    shipped = tasks.map(_._3).sum
+    CallProbe.Cost(jobStages.size, tasks.map(_._2).sorted, fileBytes)
   }
+
+  /** Result bytes the call's tasks sent to the driver; set by [[stop]]. */
+  def resultBytes: Long = shipped
 }
 
 object CallProbe {

@@ -3,13 +3,14 @@ package graft.store
 import java.sql.Timestamp
 import graft.SparkSpec
 
-/** Differential property: the driver-side small-batch validation path
-  * and the distributed join/window pipeline must flag EXACTLY the same
-  * rows with the same error identities for the same batch against the
-  * same committed log — they share replayStream, this pins the flag
-  * computation that feeds it. Seeded random batches mix valid chains,
-  * dup ids, dangling prevs, unregistered types, finals, and
-  * cross-stream interleavings.
+/** Differential property: the store's validation ([[EventStore.validate]],
+  * from driver state or the probe job) and the set-level join/window
+  * oracle ([[ValidationOracle]]) must flag EXACTLY the same rows with
+  * the same error identities for the same batch against the same
+  * committed log — they share replayStream, this pins the flag
+  * computation that feeds it. Seeded random batches of 12 to 300 rows
+  * mix valid chains, dup ids, dangling prevs, unregistered types,
+  * finals, and cross-stream interleavings.
   */
 class ValidationPathsSpec extends SparkSpec with graft.testkit.TestKitReported {
 
@@ -51,27 +52,31 @@ class ValidationPathsSpec extends SparkSpec with graft.testkit.TestKitReported {
     val seeded = s.append(seed)
     assert(seeded.rejected.isEmpty)
     val committed = Seq("c0", "c1", "c2")
-    (0 until 6).foreach { round =>
-      val batch = randomBatch(rnd, 12 + rnd.nextInt(20), committed)
-      val small = s.smallBatchValidate(batch).sortBy(_._2)
+    def round(round: Int, batch: Seq[EventInput]): Unit = {
+      val store = s.validate(batch).sortBy(_._2)
         .map { case (e, idx, err) => (e.event_id, idx, err) }
-      val dist = s.distributedValidate(batch).sortBy(_._2)
+      val oracle = ValidationOracle.validate(s, batch).sortBy(_._2)
         .map { case (e, idx, err) => (e.event_id, idx, err) }
-      assert(small == dist, s"round $round diverged:\nsmall=$small\ndist =$dist")
+      assert(store == oracle, s"round $round diverged:\nstore =$store\noracle=$oracle")
       // commit the batch through the public API so later rounds see a
-      // progressively richer committed log (both paths validated it
+      // progressively richer committed log (both validated it
       // identically above)
       s.append(batch)
     }
+    (0 until 6).foreach(r => round(r, randomBatch(rnd, 12 + rnd.nextInt(20), committed)))
+    // large batches take the same routine
+    (6 until 10).foreach(r => round(r, randomBatch(rnd, 65 + rnd.nextInt(236), committed)))
   }
 
   test("sketch fast path (fresh store) agrees with the pure job path (loaded store) append for append") {
     // `fast` keeps the membership sketches it grew commit by commit;
     // `slow` is save/load-cycled, so its sketches are the ones `load`
-    // builds from the log. Identical inputs must produce identical
-    // accept/reject sequences, and each batch's flags must equal the
-    // distributed pipeline's, which uses no sketch: the differential
-    // proof that the sketches only ever answer what they know exactly.
+    // builds from the log; despite the test's name it is no pure job
+    // path, as it runs a job only where those sketches cannot answer.
+    // Identical inputs must produce identical accept/reject sequences,
+    // and each batch's flags must equal the set-level oracle's, which
+    // uses no sketch: the differential proof that the sketches only
+    // ever answer what they know exactly.
     val rnd = new scala.util.Random(99)
     val fast = freshStore()
     val slow = freshStore()
@@ -91,9 +96,9 @@ class ValidationPathsSpec extends SparkSpec with graft.testkit.TestKitReported {
       def flags(validate: Seq[EventInput] => Seq[(EventInput, Long, String)]) =
         validate(batch).sortBy(_._2).map { case (e, idx, err) => (e.event_id, idx, err) }
       // the sketch-free oracle
-      val oracle = flags(slow.distributedValidate)
-      assert(flags(fast.smallBatchValidate) === oracle, s"round $round: fresh store vs distributed")
-      assert(flags(slow.smallBatchValidate) === oracle, s"round $round: loaded store vs distributed")
+      val oracle = flags(ValidationOracle.validate(slow, _))
+      assert(flags(fast.validate) === oracle, s"round $round: fresh store vs oracle")
+      assert(flags(slow.validate) === oracle, s"round $round: loaded store vs oracle")
       val ra = fast.append(batch)
       val rb = slow.append(batch)
       assert(ra.accepted.map(_.event_id) === rb.accepted.map(_.event_id),
@@ -112,9 +117,8 @@ class ValidationPathsSpec extends SparkSpec with graft.testkit.TestKitReported {
     assert(fast.getEvents("s9", "D").count() === 30L)
     assert(slow.getEvents("s9", "D").count() === 30L)
 
-    // enableFastAppend re-seeds the sketches from the loaded log: the
-    // re-armed store must still reject everything the log forbids
-    slow.enableFastAppend()
+    // the sketches `load` built from the log, grown by the appends
+    // since: the loaded store must still reject everything the log forbids
     assert(slow.appendEvent(EventInput("Good", "c0", "D", "s5", "{}"))
       === Left(AppendError.DuplicateEventId("c0")), "re-used id must still reject")
     assert(slow.appendEvent(EventInput("Good", "px", "D", "s0", "{}",
@@ -122,7 +126,7 @@ class ValidationPathsSpec extends SparkSpec with graft.testkit.TestKitReported {
       === Left(AppendError.DuplicatePreviousId("px")), "claimed prev must still reject")
     assert(slow.appendEvent(EventInput("Good", "py", "D", "s0", "{}"))
       === Left(AppendError.NullPreviousOnNonFirst("py")))
-    // and a clean chained append on the re-armed store still lands
+    // and a clean chained append on the loaded store still lands
     assert(slow.appendEvent(EventInput("Good", "chain30", "D", "s9", "{}",
       previous_id = Some("chain29"))).isRight)
   }

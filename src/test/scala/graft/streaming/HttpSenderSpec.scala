@@ -106,10 +106,15 @@ class HttpSenderSpec extends AnyFunSuite {
     }
     val sender = new PushSink.AsyncSender(transport = slow, capacity = 2)
     try {
-      val t0 = System.nanoTime()
-      sender("u", "a") // worker blocks inside transport
-      sender("u", "b") // fills the second slot
-      assert((System.nanoTime() - t0) < 2.0e9, "enqueue must not wait for delivery")
+      // the gate opens only later, so the bounded join fails only if
+      // the caller waits for delivery
+      val enqueue = new Thread(() => {
+        sender("u", "a") // worker blocks inside transport
+        sender("u", "b") // fills the second slot
+      })
+      enqueue.start()
+      enqueue.join(10000)
+      assert(!enqueue.isAlive, "enqueue must not wait for delivery")
       // third payload exceeds capacity: apply blocks (backpressure)
       // until the endpoint unblocks — run it from a helper thread
       val third = new Thread(() => sender("u", "c"))
@@ -158,9 +163,14 @@ class HttpSenderSpec extends AnyFunSuite {
       assert(sender.tryApply("u", "b"))
       // queue full + endpoint hung: the tick's enqueue must RETURN,
       // not block — the payload's event stays un-acked and redelivers
-      val t0 = System.nanoTime()
-      assert(sender.tryApply("u", "c", timeoutMs = 50L) === false)
-      assert((System.nanoTime() - t0) < 2.0e9, "tryApply must not stall the tick")
+      // the gate opens only later, so the bounded join fails only if
+      // the call stalls
+      val declined = new java.util.concurrent.atomic.AtomicReference[Option[Boolean]](None)
+      val tick = new Thread(() => declined.set(Some(sender.tryApply("u", "c", timeoutMs = 50L))))
+      tick.start()
+      tick.join(10000)
+      assert(!tick.isAlive, "tryApply must not stall the tick")
+      assert(declined.get === Some(false))
       gate.countDown()
       assert(sender.flush(10000L))
       assert(delivered.size == 2, "accepted payloads still deliver")
